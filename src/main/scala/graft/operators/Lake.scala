@@ -3,7 +3,8 @@ package graft.operators
 import graft.{GraftQuery, Tables}
 import graft.functions.GraftHash
 import graft.functions.Parity._
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -21,8 +22,12 @@ import org.apache.spark.sql.functions._
   */
 object Lake {
 
-  /** Scratch area for sink/source roundtrips (gitignored). */
-  def scratch(name: String): String = s"/root/repo/target/scratch/$name"
+  /** Scratch area for sink/source roundtrips and amortized layouts:
+    * `target/scratch` under the working directory (gitignored). The
+    * path is absolute — commit-log clones record it as an external
+    * reference, which must not resolve against the clone's own dir. */
+  def scratch(name: String): String =
+    s"${new java.io.File("target/scratch").getAbsolutePath}/$name"
 
   /** Submit independent Spark jobs CONCURRENTLY from worker threads
     * (SparkContext is thread-safe by contract; the scheduler
@@ -64,29 +69,48 @@ object Lake {
       recordSig(fs, path, sig)
     }
 
+  /** Every parquet part file under `p`: `p` itself when it is a file
+    * (it names its own footer), else the walk below it, recursing into
+    * nested (e.g. partition) directories. `_`- and `.`-prefixed entries
+    * below `p` are sidecars (_SUCCESS, _quota, checksums), skipped as
+    * Spark's file index skips them; any other non-`.parquet` entry
+    * THROWS, naming it — a metadata probe fails closed rather than
+    * under-count what a read of the same path would see or refuse. */
+  def dataFiles(fs: FileSystem, p: Path): Seq[FileStatus] = {
+    def below(st: FileStatus): Seq[FileStatus] = {
+      val name = st.getPath.getName
+      if (name.startsWith("_") || name.startsWith(".")) Seq.empty
+      else if (st.isDirectory) fs.listStatus(st.getPath).toSeq.flatMap(below)
+      else if (name.endsWith(".parquet")) Seq(st)
+      else throw new java.io.IOException(
+        s"unexpected non-parquet entry ${st.getPath} (refusing to skip data)")
+    }
+    val st = fs.getFileStatus(p)
+    if (st.isDirectory) fs.listStatus(p).toSeq.flatMap(below) else Seq(st)
+  }
+
+  /** Record count of one part file, read from its footer on the driver.
+    * A torn or corrupt footer throws. */
+  def partRows(conf: Configuration, f: FileStatus): Long = {
+    val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf))
+    try rd.getRecordCount finally rd.close()
+  }
+
   /** Sum of parquet footer record counts under `paths` (each a part
-    * file or a directory of part files) — exactly the number a
-    * `read.parquet(paths).count()` job computes (count() prunes to
-    * footer metadata), WITHOUT scheduling a Spark job per probe: the
-    * quotaUsage / reportVerified discipline (r18/r19, guide §1.2 —
-    * per-step overhead once the shape is right). A missing path or
-    * torn/corrupt footer THROWS — metadata probes must fail closed,
-    * never read as zero rows. */
+    * file or a directory of part files, walked by [[dataFiles]]) —
+    * exactly the number a `read.parquet(paths).count()` job computes
+    * (count() prunes to footer metadata), WITHOUT scheduling a Spark
+    * job per probe. Fails closed, never reads as zero rows: a missing
+    * path, a torn/corrupt footer, a foreign file, or a path with no
+    * part file at all (where that read cannot infer a schema) THROWS. */
   def footerRows(spark: SparkSession, paths: Seq[String]): Long = {
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = FileSystem.get(conf)
     paths.map { p =>
-      val st = fs.getFileStatus(new Path(p))
-      val parts =
-        if (st.isDirectory)
-          fs.listStatus(st.getPath)
-            .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-        else Array(st)
-      parts.map { f =>
-        val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf))
-        try rd.getRecordCount finally rd.close()
-      }.sum
+      val parts = dataFiles(fs, new Path(p))
+      if (parts.isEmpty) throw new java.io.IOException(s"no parquet part file under $p")
+      parts.map(partRows(conf, _)).sum
     }.sum
   }
 

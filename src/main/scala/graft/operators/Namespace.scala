@@ -157,44 +157,20 @@ object Namespace {
                  dir: Path): (Long, Long) = {
     val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(dir)) return (0L, 0L)
-    val entries = fs.listStatus(dir)
-      .filter(_.getPath.getName != "_quota")
-    // an EMPTY directory entry serves zero rows vacuously — that is
-    // usage, not a read failure, so it must not trip the fail-closed
-    // propagation below (TestQuota's admission arena counts empty
-    // entries against the namespace quota with no data to read)
-    val dataEntries = entries.filter { st =>
-      !st.isDirectory || fs.listStatus(st.getPath).nonEmpty
-    }
+    val entries = fs.listStatus(dir).count(_.getPath.getName != "_quota")
     // Footer row counts read DIRECTLY on the driver (r18): the count
     // is parquet footer metadata either way, but `read.parquet(...)
     // .count()` schedules a full Spark job per probe — and this
     // ceremony probes usage ~23 times (15 steps + 8 admissions), so
-    // job-scheduling overhead WAS the op's cost (guide §1.2: fix the
-    // per-task/per-job work once the shape is right). O(entries)
-    // footer opens per probe, the exact metadata cost the SURVEY row
-    // claims; identical numbers by definition (footer rowcount sums).
+    // job-scheduling overhead WAS the op's cost. O(entries) footer
+    // opens per probe. The walk recurses and THROWS on foreign
+    // entries (ADVICE r18: skipping them under-counts usage, the
+    // fail-open direction); an EMPTY directory entry is vacuous usage
+    // (zero rows), not a read failure — TestQuota's admission arena
+    // counts empty entries against the namespace quota with no data.
     val conf = spark.sparkContext.hadoopConfiguration
-    // Recurse into nested directories and FAIL (throw) on any
-    // non-underscore entry that is not a parquet part file (ADVICE
-    // r18): the r18 form silently skipped them, an under-count in
-    // exactly the fail-open direction this function's own fail-closed
-    // contract forbids — the old spark.read path either counted such
-    // files or errored closed. Underscore-prefixed sidecars
-    // (_SUCCESS, _quota) are metadata by convention, not data.
-    def dataFiles(st: org.apache.hadoop.fs.FileStatus): Seq[org.apache.hadoop.fs.FileStatus] =
-      if (st.getPath.getName.startsWith("_")) Seq.empty
-      else if (st.isDirectory) fs.listStatus(st.getPath).toSeq.flatMap(dataFiles)
-      else if (st.getPath.getName.endsWith(".parquet")) Seq(st)
-      else throw new java.io.IOException(
-        s"quota usage: unexpected non-parquet entry ${st.getPath} — " +
-          "refusing to under-count usage (fail closed)")
-    val rows = dataEntries.flatMap(dataFiles).map { f =>
-      val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf))
-      try rd.getRecordCount finally rd.close()
-    }.sum
-    (entries.length.toLong, rows)
+    val rows = Lake.dataFiles(fs, dir).map(Lake.partRows(conf, _)).sum
+    (entries.toLong, rows)
   }
 
   /** WRITE-TIME quota admission — the FSDirectory.verifyQuota gate

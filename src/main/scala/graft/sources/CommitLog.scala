@@ -1,7 +1,9 @@
 package graft.sources
 
+import graft.operators.Lake
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Append-only commit log for a versioned parquet table — the missing
   * half of the reference's durability pair: `lake_snapshot` is the
@@ -18,7 +20,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * }}}
   *
   * Each log file is a tiny text journal: `ts <millis>` then one
-  * `add <relpath>` / `remove <relpath>` per line. A version commits by
+  * `add <relpath>` / `remove <relpath>` per line, closed by `end`. A
+  * commit whose data it wrote itself (`writeCommit`, the `checkpoint`
+  * image) also records `schema <json>`: the Spark row schema of that
+  * data, taken on the driver from the footer of one part file it just
+  * wrote, decoded as Spark's own inference decodes it (in the nullable
+  * form every parquet read gives its columns). Readers ignore
+  * lines they do not know, so journals with and without it stay
+  * readable both ways. A version commits by
   * CREATING its log file exclusively (`FileSystem.create(path,
   * overwrite = false)`): two concurrent writers racing for version N
   * cannot both succeed — the loser sees FileAlreadyExists, re-reads
@@ -29,7 +38,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Reads reconstruct the active file set at any version (`snapshot`)
   * or wall-clock instant (`snapshotAsOf`) by replaying the log — pure
   * driver-side metadata ops (a NameNode replaying edits), after which
-  * the data read is an ordinary pruned parquet scan. At 100 TB the
+  * the data read is an ordinary pruned parquet scan. Every read goes
+  * through one reader (`read`): when EVERY entry it reads carries the
+  * same recorded schema, that schema is handed to Spark and resolving
+  * the snapshot schedules no job (a NameNode never opens a block to
+  * learn its shape); otherwise — legacy journals, adds committed
+  * through `commit()` (clones, restores, external compactions),
+  * mixed schemas — Spark infers the schema from a footer, as it
+  * would for any parquet read. Both give the same schema: when all
+  * footers agree, inference over any of them returns the recorded one.
+  * At 100 TB the
   * log stays tiny (it scales with commits, not data), replay is
   * O(versions), and nothing ever rewrites a data file: version reads
   * are stable under concurrent appends.
@@ -45,9 +63,12 @@ object CommitLog {
     * image commit (its adds are a self-contained snapshot, so replay
     * may start at it). `tags` carries ceremony markers (`upgrade` /
     * `rollback` / `finalize`) — unknown tags replay as no-ops, so old
-    * readers skip them instead of failing. */
+    * readers skip them instead of failing. `schema` is the recorded
+    * Spark schema (JSON) of the data this commit's adds hold, when the
+    * commit wrote that data itself. */
   final case class Commit(version: Int, ts: Long, adds: Seq[String], removes: Seq[String],
-                          isCheckpoint: Boolean = false, tags: Set[String] = Set.empty)
+                          isCheckpoint: Boolean = false, tags: Set[String] = Set.empty,
+                          schema: Option[String] = None)
 
   /** All committed versions in order (driver-side metadata read). A
     * log file without the terminal `end` marker is a commit that died
@@ -75,7 +96,8 @@ object CommitLog {
             lines.collect { case l if l.startsWith("add ") => l.drop(4) },
             lines.collect { case l if l.startsWith("remove ") => l.drop(7) },
             isCheckpoint = lines.contains("ckpt"),
-            tags = lines.collect { case l if l.startsWith("tag ") => l.drop(4) }.toSet))
+            tags = lines.collect { case l if l.startsWith("tag ") => l.drop(4) }.toSet,
+            schema = lines.collectFirst { case l if l.startsWith("schema ") => l.drop(7) }))
         }
       }
   }
@@ -185,13 +207,14 @@ object CommitLog {
   def tryCommit(fs: FileSystem, tableDir: String, v: Int, ts: Long,
                 adds: Seq[String], removes: Seq[String],
                 checkpointMarker: Boolean = false,
-                tags: Seq[String] = Nil): Boolean = {
+                tags: Seq[String] = Nil, schema: Option[String] = None): Boolean = {
     if (isFrozen(fs, tableDir))
       throw new java.io.IOException(
         s"$tableDir is frozen (safe mode): mutations refused, reads unaffected")
     fs.mkdirs(logDir(tableDir))
     val f = logFile(tableDir, v)
-    val marker = (if (checkpointMarker) Seq("ckpt") else Seq.empty) ++ tags.map("tag " + _)
+    val marker = (if (checkpointMarker) Seq("ckpt") else Seq.empty) ++ tags.map("tag " + _) ++
+      schema.map("schema " + _)
     val body = (s"ts $ts" +: marker ++: (adds.map("add " + _) ++ removes.map("remove " + _)) :+ "end")
       .mkString("", "\n", "\n")
     val out =
@@ -215,9 +238,9 @@ object CommitLog {
   def commit(fs: FileSystem, tableDir: String, ts: Long,
              adds: Seq[String], removes: Seq[String],
              checkpointMarker: Boolean = false,
-             tags: Seq[String] = Nil): Int = {
+             tags: Seq[String] = Nil, schema: Option[String] = None): Int = {
     var v = maxVersionOnDisk(fs, tableDir).map(_ + 1).getOrElse(0)
-    while (!tryCommit(fs, tableDir, v, ts, adds, removes, checkpointMarker, tags)) v += 1
+    while (!tryCommit(fs, tableDir, v, ts, adds, removes, checkpointMarker, tags, schema)) v += 1
     v
   }
 
@@ -346,42 +369,22 @@ object CommitLog {
     val active = activeFiles(fs, tableDir)
     // the actual read — a corrupt footer throws here and the file
     // simply never joins the verified set. Runs OUTSIDE the lock: it
-    // is the only cluster work in a report. Files the PRE-READ marker
+    // is the expensive part of a report. Files the PRE-READ marker
     // already records skip the read (a re-reported full active set
     // must not re-pay O(files) verification I/O every cadence); the
     // lock-protected fold below still merges against the CURRENT
     // marker, so a concurrent reporter's progress is never lost.
     val ok = relPaths.filter(active.contains).filter { rel =>
       pre.verified.contains(rel) || {
-        // footer verification is a FOOTER read either way — the r17
-        // form scheduled a Spark count job per file (count() prunes
-        // to footer metadata), paying job scheduling for a
-        // metadata-sized check ~O(files) times per report cadence;
-        // the footers are now opened directly (r18, the quotaUsage
-        // discipline). A torn/corrupt footer throws on open, an
-        // empty entry verifies vacuously-false exactly like the
-        // schema-inference failure did — any failure means
-        // unverified, never an op abort
+        // footers opened directly on the driver, no job (r18). The
+        // shared walker recurses into nested (partition) dirs and
+        // throws on a foreign non-parquet entry, so such an entry stays
+        // unverified, as the old spark.read verification left it; an
+        // entry with no part file verifies false, never vacuously.
         try {
           val conf = spark.sparkContext.hadoopConfiguration
-          val p = new Path(resolve(tableDir, rel))
-          // Any non-underscore entry that is NOT a parquet part file
-          // fails verification (ADVICE r18): the r18 form silently
-          // ignored such files, so a torn/corrupt sidecar data file
-          // that previously made spark.read.parquet fail (marking the
-          // entry unverified) passed as long as the suffixed parts
-          // were intact — this restores the old fail-unverified scope.
-          val st = fs.getFileStatus(p)
-          val (entries, parts) =
-            if (st.isDirectory) {
-              val es = fs.listStatus(p).filterNot(_.getPath.getName.startsWith("_"))
-              (es, es.filter(f => f.isFile && f.getPath.getName.endsWith(".parquet")))
-            } else (Array(st), Array(st)) // a bare-file entry verifies by its own footer
-          parts.length == entries.length && parts.nonEmpty && parts.forall { f =>
-            val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
-              org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf))
-            try rd.getRecordCount >= 0L finally rd.close()
-          }
+          val parts = Lake.dataFiles(fs, new Path(resolve(tableDir, rel)))
+          parts.nonEmpty && parts.forall(Lake.partRows(conf, _) >= 0L)
         }
         catch { case scala.util.control.NonFatal(_) => false }
       }
@@ -410,7 +413,32 @@ object CommitLog {
       throw new java.io.IOException(
         s"$tableDir is frozen (safe mode): write refused before any data I/O")
     df.write.mode("overwrite").parquet(s"$tableDir/$relPath")
-    commit(fs, tableDir, ts, adds = Seq(relPath), removes = Seq.empty)
+    commit(fs, tableDir, ts, adds = Seq(relPath), removes = Seq.empty,
+      schema = writtenSchema(spark, fs, s"$tableDir/$relPath"))
+  }
+
+  /** The schema (JSON) a read of the parquet just written under `dir`
+    * resolves to, from the footer of its first part file; None when
+    * there is no part file or its footer lacks Spark's schema key (the
+    * entry then resolves by inference). */
+  private def writtenSchema(spark: SparkSession, fs: FileSystem, dir: String): Option[String] =
+    Lake.dataFiles(fs, new Path(dir)).headOption
+      .flatMap(org.apache.spark.sql.graft.Shims.sparkFooterSchema(spark, _)).map(_.json)
+
+  /** The one read path of the commit log: a parquet read of the given
+    * active entries (relpath, recorded schema). The recorded schema is
+    * handed to Spark only when EVERY entry carries the same one — then
+    * no schema-inference job runs; any entry without one (legacy
+    * journal, adds made through `commit()`, foreign parquet) or a mix
+    * of schemas leaves the read to Spark's inference. */
+  private def read(spark: SparkSession, tableDir: String,
+                   entries: Seq[(String, Option[String])]): DataFrame = {
+    val paths = entries.map { case (p, _) => resolve(tableDir, p) }
+    entries.map(_._2).distinct match {
+      case Seq(Some(json)) =>
+        spark.read.schema(DataType.fromJson(json).asInstanceOf[StructType]).parquet(paths: _*)
+      case _ => spark.read.parquet(paths: _*)
+    }
   }
 
   /** Resolve a journal entry to a readable path: entries beginning
@@ -500,9 +528,13 @@ object CommitLog {
 
   /** Active (relative) file set after replaying the log through the
     * given versions. */
-  private def activeSet(cs: Seq[Commit]): Seq[String] = {
-    val active = scala.collection.mutable.LinkedHashSet.empty[String]
-    cs.foreach { c => active ++= c.adds; active --= c.removes }
+  private def activeSet(cs: Seq[Commit]): Seq[String] = activeEntries(cs).map(_._1)
+
+  /** The active set with each entry's recorded schema: that of the
+    * commit which last added it (a re-add without one drops it). */
+  private def activeEntries(cs: Seq[Commit]): Seq[(String, Option[String])] = {
+    val active = scala.collection.mutable.LinkedHashMap.empty[String, Option[String]]
+    cs.foreach { c => c.adds.foreach(active(_) = c.schema); active --= c.removes }
     active.toSeq
   }
 
@@ -523,18 +555,18 @@ object CommitLog {
   /** Read the table as of a version (default: latest). */
   def snapshot(spark: SparkSession, tableDir: String, version: Int = Int.MaxValue): DataFrame = {
     val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    val paths = activeSet(commits(fs, tableDir).filter(_.version <= version))
-    require(paths.nonEmpty, s"no active files in $tableDir at version $version")
-    spark.read.parquet(paths.map(resolve(tableDir, _)): _*)
+    val entries = activeEntries(commits(fs, tableDir).filter(_.version <= version))
+    require(entries.nonEmpty, s"no active files in $tableDir at version $version")
+    read(spark, tableDir, entries)
   }
 
   /** Read the table as it stood at a wall-clock instant (time travel
     * by timestamp: all commits with ts <= asOfMillis). */
   def snapshotAsOf(spark: SparkSession, tableDir: String, asOfMillis: Long): DataFrame = {
     val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    val paths = activeSet(commits(fs, tableDir).filter(_.ts <= asOfMillis))
-    require(paths.nonEmpty, s"no active files in $tableDir as of $asOfMillis")
-    spark.read.parquet(paths.map(resolve(tableDir, _)): _*)
+    val entries = activeEntries(commits(fs, tableDir).filter(_.ts <= asOfMillis))
+    require(entries.nonEmpty, s"no active files in $tableDir as of $asOfMillis")
+    read(spark, tableDir, entries)
   }
 
   /** FSImage-style checkpoint: materialize the CURRENT active set
@@ -554,19 +586,18 @@ object CommitLog {
     // occupies >= next, so tryCommit loses the create-exclusive race
     // and the ceremony aborts instead of acting on a stale snapshot.
     val next = maxVersionOnDisk(fs, tableDir).map(_ + 1).getOrElse(0)
-    val base = stableCommits(fs, tableDir)
-    val active = activeSet(base)
+    val entries = activeEntries(stableCommits(fs, tableDir))
+    val active = entries.map(_._1)
     require(active.nonEmpty, s"nothing to checkpoint in $tableDir")
     val image = s"data/ckpt-$next"
-    spark.read.parquet(active.map(resolve(tableDir, _)): _*)
-      .write.mode("overwrite").parquet(s"$tableDir/$image")
+    read(spark, tableDir, entries).write.mode("overwrite").parquet(s"$tableDir/$image")
     // Compare-and-swap, not blind retry: the image reflects the active
-    // set AS OF `base`, so it may only commit at the exact next
+    // set AS OF the journal read above, so it may only commit at the exact next
     // version. If a concurrent writer got there first, retrying at a
     // higher version would resurrect whatever that writer removed —
     // delete the stale image and make the caller redo the checkpoint.
     if (!tryCommit(fs, tableDir, next, ts, adds = Seq(image), removes = active,
-        checkpointMarker = true)) {
+        checkpointMarker = true, schema = writtenSchema(spark, fs, s"$tableDir/$image"))) {
       fs.delete(new Path(tableDir, image), true)
       throw new java.util.ConcurrentModificationException(
         s"$tableDir advanced past version $next during checkpoint — retry")
@@ -966,8 +997,10 @@ object CommitLog {
             destRelPath: String, ts: Long): (Int, Seq[String]) = {
     val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
     val next = maxVersionOnDisk(fs, tableDir).map(_ + 1).getOrElse(0)
-    val active = activeSet(stableCommits(fs, tableDir))
-    val doomed = active.filter(p => p == prefix || p.startsWith(prefix + "/"))
+    val entries = activeEntries(stableCommits(fs, tableDir))
+    val active = entries.map(_._1)
+    val isDoomed = (p: String) => p == prefix || p.startsWith(prefix + "/")
+    val doomed = active.filter(isDoomed)
     require(doomed.nonEmpty, s"nothing to drain: no active files under $prefix in $tableDir")
     // The overwrite-write below (and the delete on CAS failure) would
     // clobber live data if destRelPath is already an active path — the
@@ -976,7 +1009,7 @@ object CommitLog {
         || destRelPath.startsWith(p + "/")),
       s"drain dest $destRelPath overlaps an active path in $tableDir")
     val survivors = active.filterNot(doomed.toSet)
-    spark.read.parquet(doomed.map(resolve(tableDir, _)): _*)
+    read(spark, tableDir, entries.filter { case (p, _) => isDoomed(p) })
       .write.mode("overwrite").parquet(s"$tableDir/$destRelPath")
     if (!tryCommit(fs, tableDir, next, ts, adds = survivors :+ destRelPath,
         removes = doomed, checkpointMarker = true, tags = Seq("drain"))) {
@@ -1134,12 +1167,12 @@ object CommitLog {
     * open-for-read-with-flushed-length path. */
   def snapshotWithInflight(spark: SparkSession, tableDir: String): DataFrame = {
     val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    val committed = activeFiles(fs, tableDir)
+    val committed = activeEntries(commits(fs, tableDir))
     val flushed = flushedAdds(fs, tableDir).values.flatten.toSeq.distinct
-      .filterNot(committed.toSet)
-    val all = committed ++ flushed
+      .filterNot(committed.map(_._1).toSet)
+    val all = committed ++ flushed.map(_ -> None)
     require(all.nonEmpty, s"no active or flushed files in $tableDir")
-    spark.read.parquet(all.map(resolve(tableDir, _)): _*)
+    read(spark, tableDir, all)
   }
 
   /** Close: promote the writer's flushed set into an ordinary journal

@@ -48,7 +48,7 @@ object DedupScaleProbe {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    val scaledDir = s"/root/repo/target/scratch/scale$factor"
+    val scaledDir = graft.operators.Lake.scratch(s"scale$factor")
     ScaleStress.materialize(spark, base, scaledDir, factor)
 
     final case class Probe(nDocs: Long, candPrefix: Long, truth: Long,

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   */
 object FluencyProbe {
   def main(args: Array[String]): Unit = {
-    val dir = args.headOption.getOrElse("/root/repo/target/scratch/scale100")
+    val dir = args.headOption.getOrElse(graft.operators.Lake.scratch("scale100"))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")

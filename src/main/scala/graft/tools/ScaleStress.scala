@@ -65,7 +65,7 @@ object ScaleStress {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    val scaledDir = s"/root/repo/target/scratch/scale$factor"
+    val scaledDir = graft.operators.Lake.scratch(s"scale$factor")
     materialize(spark, base, scaledDir, factor)
 
     // the NDataOps most expensive queries by cross-run best, skipping

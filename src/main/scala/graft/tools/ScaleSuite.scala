@@ -36,7 +36,7 @@ object ScaleSuite {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    val scaledDir = s"/root/repo/target/scratch/scale$factor"
+    val scaledDir = graft.operators.Lake.scratch(s"scale$factor")
     ScaleStress.materialize(spark, base, scaledDir, factor)
 
     // same warmup the bench does, over the SCALED tables

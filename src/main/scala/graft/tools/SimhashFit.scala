@@ -56,7 +56,7 @@ object SimhashFit {
       if (args.length > 2) args(2).split(",").map(_.trim.toInt).toSeq
       else Seq(1, 10, 30)
     val scales = factors.map(f =>
-      f -> (if (f == 1) base else s"/root/repo/target/scratch/scale$f"))
+      f -> (if (f == 1) base else graft.operators.Lake.scratch(s"scale$f")))
     val rows = scales.map { case (f, dir) =>
       if (f > 1) ScaleStress.materialize(spark, base, dir, f)
       val (tc, nc, tf, no) = measure(dir)

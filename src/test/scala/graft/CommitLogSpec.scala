@@ -2,7 +2,10 @@ package graft
 
 import graft.sources.CommitLog
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DataType
 
 class CommitLogSpec extends SparkSpec {
 
@@ -10,7 +13,7 @@ class CommitLogSpec extends SparkSpec {
     FileSystem.get(spark.sparkContext.hadoopConfiguration)
 
   private def freshTable(name: String): String = {
-    val dir = s"/root/repo/target/scratch/commitlog/$name"
+    val dir = graft.operators.Lake.scratch(s"commitlog/$name")
     fs.delete(new Path(dir), true)
     dir
   }
@@ -118,7 +121,7 @@ class CommitLogSpec extends SparkSpec {
     import graft.streaming.StreamingOps.Ev
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val dir = freshTable("stream_sink")
-    val ck = s"/root/repo/target/scratch/commitlog/stream_sink_ck"
+    val ck = graft.operators.Lake.scratch(s"commitlog/stream_sink_ck")
     fs.delete(new Path(ck), true)
     fs.delete(new Path(ck + "2"), true)
     val events = Tables.events(spark, sfDir)
@@ -690,5 +693,167 @@ class CommitLogSpec extends SparkSpec {
       "lease recovery reclaims EVERYTHING the crashed writer staged")
     assert(CommitLog.flushedAdds(fs, dir).isEmpty)
     assert(CommitLog.snapshot(spark, dir).count() == 2, "committed truth intact")
+  }
+
+  // ---- recorded schema: job-free snapshot resolution ----------------
+
+  /** Jobs Spark starts while `f` runs (before any action on what it
+    * returns). */
+  private def jobsDuring[T](f: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    org.apache.spark.SpecBus.drain(sc)
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { n.incrementAndGet(); () }
+    }
+    sc.addSparkListener(l)
+    try {
+      val r = f
+      org.apache.spark.SpecBus.drain(sc)
+      (r, n.get)
+    } finally sc.removeSparkListener(l)
+  }
+
+  /** What a plain parquet read of the active entries returns: the
+    * reference every commit-log read must equal. */
+  private def inferred(dir: String, version: Int = Int.MaxValue) =
+    spark.read.parquet(CommitLog.activeFiles(fs, dir, version).map(p => s"$dir/$p"): _*)
+
+  private def sameRead(a: DataFrame, b: DataFrame): Unit = {
+    assert(a.schema == b.schema, s"${a.schema.treeString} vs ${b.schema.treeString}")
+    val rows = (df: DataFrame) => df.collect().map(_.toString).sorted.toSeq
+    assert(rows(a) == rows(b))
+  }
+
+  /** Decimal, timestamp, array, struct, map and nullable columns. */
+  private def typed(from: Long, until: Long): DataFrame =
+    spark.range(from, until).select(
+      col("id"),
+      (col("id") * 1.25).cast("decimal(12,2)").as("amount"),
+      timestamp_seconds(col("id") * 3600).as("at"),
+      array(col("id"), col("id") + 1).as("pair"),
+      struct(col("id").as("k"), col("id").cast("string").as("v")).as("kv"),
+      map(col("id").cast("string"), col("id") * 2).as("m"),
+      when(col("id") % 3 === 0, lit(null)).otherwise(col("id").cast("string")).as("maybe"))
+
+  test("snapshot, snapshotAsOf and checkpoint's read resolve from the recorded schema: no job") {
+    val dir = freshTable("schema_nojob")
+    CommitLog.writeCommit(spark, dir, typed(0, 20), "data/a", ts = 100L)
+    CommitLog.writeCommit(spark, dir, typed(20, 50), "data/b", ts = 200L)
+    assert(CommitLog.commits(fs, dir).forall(_.schema.isDefined))
+    val (head, j0) = jobsDuring(CommitLog.snapshot(spark, dir))
+    val (v0, j1) = jobsDuring(CommitLog.snapshot(spark, dir, version = 0))
+    val (asOf, j2) = jobsDuring(CommitLog.snapshotAsOf(spark, dir, 150L))
+    assert((j0, j1, j2) == ((0, 0, 0)), s"resolve jobs: head $j0, v0 $j1, asOf $j2")
+    sameRead(head, inferred(dir))
+    sameRead(v0, inferred(dir, 0))
+    sameRead(asOf, inferred(dir, 0))
+    // checkpoint = read the active set + write the image: the write's
+    // job is the only one; an inferred read of the same set adds one
+    val legacy = freshTable("schema_nojob_legacy")
+    typed(0, 50).write.parquet(s"$legacy/data/a")
+    CommitLog.commit(fs, legacy, 100L, Seq("data/a"), Nil)
+    val (_, jLegacy) = jobsDuring(CommitLog.checkpoint(spark, legacy, ts = 300L))
+    val (_, jCkpt) = jobsDuring(CommitLog.checkpoint(spark, dir, ts = 300L))
+    assert(jCkpt == 1 && jLegacy == 2, s"checkpoint jobs: recorded $jCkpt, inferred $jLegacy")
+  }
+
+  test("the checkpoint image commit carries the schema; reads after it stay job-free") {
+    val dir = freshTable("schema_ckpt")
+    CommitLog.writeCommit(spark, dir, typed(0, 20), "data/a", ts = 100L)
+    CommitLog.writeCommit(spark, dir, typed(20, 50), "data/b", ts = 200L)
+    val before = CommitLog.snapshot(spark, dir)
+    val v = CommitLog.checkpoint(spark, dir, ts = 300L)
+    val img = CommitLog.commits(fs, dir).find(_.version == v).get
+    assert(img.isCheckpoint && img.schema.isDefined)
+    assert(DataType.fromJson(img.schema.get) == before.schema,
+      "the image records the schema its read resolved")
+    CommitLog.writeCommit(spark, dir, typed(50, 60), "data/c", ts = 400L)
+    val (head, jobs) = jobsDuring(CommitLog.snapshot(spark, dir))
+    assert(jobs == 0)
+    sameRead(head, inferred(dir))
+    assert(head.count() == 60)
+  }
+
+  test("a journal without schema lines (old format) falls back to inference and reads as before") {
+    val dir = freshTable("schema_legacy")
+    typed(0, 20).write.parquet(s"$dir/data/a")
+    typed(20, 50).write.parquet(s"$dir/data/b")
+    // hand-written in the format older writers produce
+    fs.mkdirs(new Path(s"$dir/_log"))
+    Seq("ts 100\nadd data/a\nend\n", "ts 200\nadd data/b\nend\n").zipWithIndex.foreach {
+      case (body, v) =>
+        val out = fs.create(new Path(f"$dir/_log/$v%09d.log"), false)
+        try out.write(body.getBytes("UTF-8")) finally out.close()
+    }
+    assert(CommitLog.commits(fs, dir).forall(_.schema.isEmpty))
+    val (head, jobs) = jobsDuring(CommitLog.snapshot(spark, dir))
+    assert(jobs >= 1, "no recorded schema: Spark infers it")
+    sameRead(head, inferred(dir))
+    // a recorded entry beside an unrecorded one still infers
+    CommitLog.writeCommit(spark, dir, typed(50, 60), "data/c", ts = 300L)
+    val (mixed, j2) = jobsDuring(CommitLog.snapshot(spark, dir))
+    assert(j2 >= 1)
+    sameRead(mixed, inferred(dir))
+  }
+
+  test("entries with different recorded schemas fall back to inference") {
+    val dir = freshTable("schema_mixed")
+    CommitLog.writeCommit(spark, dir, typed(0, 20), "data/a", ts = 100L)
+    CommitLog.writeCommit(spark, dir, typed(20, 50).drop("m"), "data/b", ts = 200L)
+    val cs = CommitLog.commits(fs, dir)
+    assert(cs.map(_.schema).distinct.size == 2)
+    val (head, jobs) = jobsDuring(CommitLog.snapshot(spark, dir))
+    assert(jobs >= 1)
+    sameRead(head, inferred(dir))
+    // one schema again once the odd entry is removed
+    CommitLog.commit(fs, dir, 300L, Nil, Seq("data/b"))
+    val (v2, j2) = jobsDuring(CommitLog.snapshot(spark, dir))
+    assert(j2 == 0)
+    sameRead(v2, inferred(dir))
+  }
+
+  test("foreign parquet without the Spark schema key records nothing and reads by inference") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    val dir = freshTable("schema_foreign")
+    val msg = MessageTypeParser.parseMessageType(
+      "message t { required int64 id; optional binary name (UTF8); }")
+    val part = new Path(s"$dir/data/f/part-00000.parquet")
+    val w = ExampleParquetWriter.builder(part).withType(msg)
+      .withConf(spark.sparkContext.hadoopConfiguration).build()
+    val groups = new SimpleGroupFactory(msg)
+    try (0 until 10).foreach { i =>
+      w.write(groups.newGroup().append("id", i.toLong).append("name", s"n$i"))
+    } finally w.close()
+    val st = fs.getFileStatus(part)
+    assert(org.apache.spark.sql.graft.Shims.sparkFooterSchema(spark, st).isEmpty)
+    // the decoder agrees with inference on Spark-written parquet
+    val spk = freshTable("schema_foreign_spark")
+    typed(0, 5).write.parquet(spk)
+    val sparkPart = graft.operators.Lake.dataFiles(fs, new Path(spk)).head
+    assert(org.apache.spark.sql.graft.Shims.sparkFooterSchema(spark, sparkPart) ==
+      Some(spark.read.parquet(spk).schema))
+    CommitLog.commit(fs, dir, 100L, Seq("data/f"), Nil)
+    val (head, jobs) = jobsDuring(CommitLog.snapshot(spark, dir))
+    assert(jobs >= 1)
+    sameRead(head, inferred(dir))
+    assert(head.count() == 10)
+  }
+
+  test("safe mode verifies an entry of nested partition dirs, refuses a foreign file") {
+    val dir = freshTable("safemode_nested")
+    typed(0, 30).withColumn("k", col("id") % 3)
+      .write.partitionBy("k").parquet(s"$dir/data/p")
+    typed(30, 40).write.parquet(s"$dir/data/q")
+    CommitLog.commit(fs, dir, 100L, Seq("data/p", "data/q"), Nil)
+    val junk = fs.create(new Path(s"$dir/data/q/notes.txt"))
+    try junk.write("not data".getBytes("UTF-8")) finally junk.close()
+    CommitLog.enterSafeMode(fs, dir, thresholdPm = 1000)
+    assert(CommitLog.reportVerified(spark, dir, Seq("data/p", "data/q")) == ((1, 2, true)),
+      "the partitioned entry verifies; the one holding a foreign file does not")
+    fs.delete(new Path(s"$dir/data/q/notes.txt"), false)
+    assert(CommitLog.reportVerified(spark, dir, Seq("data/q")) == ((2, 2, false)))
   }
 }

@@ -199,8 +199,8 @@ class DedupSimilaritySpec extends SparkSpec {
     val g = Similarity.sKnnGraph.fn(spark, sfDir).collect()
     assert(g.nonEmpty)
     // the graph build provisioned the cell-partitioned layout
-    val path = "/root/repo/target/scratch/knn_cells_" +
-      sfDir.replaceAll("[^A-Za-z0-9]", "_")
+    val path = graft.operators.Lake.scratch("knn_cells_" +
+      sfDir.replaceAll("[^A-Za-z0-9]", "_"))
     val layout = spark.read.parquet(path)
     assert(layout.count() == Tables.embeddings(spark, sfDir).count(),
       "every vector must be in exactly one cell of the layout (no drops)")

@@ -17,7 +17,7 @@ class DurabilitySpec extends SparkSpec {
     FileSystem.get(spark.sparkContext.hadoopConfiguration)
 
   private def fresh(name: String): String = {
-    val dir = s"/root/repo/target/scratch/durability/$name"
+    val dir = graft.operators.Lake.scratch(s"durability/$name")
     fs.delete(new Path(dir), true)
     dir
   }

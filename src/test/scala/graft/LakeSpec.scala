@@ -303,4 +303,23 @@ class LakeSpec extends SparkSpec {
     assert(got == expect,
       s"missing=${(expect -- got).take(3)} extra=${(got -- expect).take(3)}")
   }
+
+  test("footerRows counts nested part files and fails closed on foreign or empty paths") {
+    import org.apache.hadoop.fs.{FileSystem, Path}
+    val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    val dir = Lake.scratch("footer_rows")
+    fs.delete(new Path(dir), true)
+    val df = spark.range(0, 40).withColumn("k", col("id") % 4)
+    df.write.partitionBy("k").parquet(s"$dir/nested")
+    df.write.parquet(s"$dir/flat")
+    assert(Lake.footerRows(spark, Seq(s"$dir/nested")) == 40L, "nested part files count")
+    assert(Lake.footerRows(spark, Seq(s"$dir/nested", s"$dir/flat")) == 80L)
+    assert(Lake.dataFiles(fs, new Path(s"$dir/nested")).forall(_.getPath.getName.endsWith(".parquet")))
+    val junk = fs.create(new Path(s"$dir/flat/stray.csv"))
+    try junk.write("1,2\n".getBytes("UTF-8")) finally junk.close()
+    val e = intercept[java.io.IOException](Lake.footerRows(spark, Seq(s"$dir/flat")))
+    assert(e.getMessage.contains("stray.csv"), e.getMessage)
+    fs.mkdirs(new Path(s"$dir/empty"))
+    intercept[java.io.IOException](Lake.footerRows(spark, Seq(s"$dir/empty")))
+  }
 }

@@ -20,7 +20,7 @@ class NamespaceContractSpec extends SparkSpec {
     FileSystem.get(spark.sparkContext.hadoopConfiguration)
 
   private def fresh(name: String): Path = {
-    val dir = new Path(s"/root/repo/target/scratch/nscontract/$name")
+    val dir = new Path(graft.operators.Lake.scratch(s"nscontract/$name"))
     fs.delete(dir, true)
     fs.mkdirs(dir)
     dir

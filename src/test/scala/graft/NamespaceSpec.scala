@@ -10,7 +10,7 @@ class NamespaceSpec extends SparkSpec {
     FileSystem.get(spark.sparkContext.hadoopConfiguration)
 
   private def freshRoot(name: String): String = {
-    val dir = s"/root/repo/target/scratch/namespace/$name"
+    val dir = graft.operators.Lake.scratch(s"namespace/$name")
     fs.delete(new Path(dir), true)
     dir
   }

@@ -11,7 +11,7 @@ class TablesSpec extends SparkSpec {
   test("relation cache invalidates on in-place part rewrite") {
     import spark.implicits._
     val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    val dir = "/root/repo/target/scratch/tables_sig"
+    val dir = graft.operators.Lake.scratch("tables_sig")
     fs.delete(new Path(dir), true)
     Seq(1L, 2L, 3L).toDF("v").coalesce(1)
       .write.parquet(s"$dir/probe.parquet")

@@ -32,7 +32,7 @@ class WarehouseSpec extends SparkSpec {
 
   test("bucketed layout rebuilds when the source files change, even at equal row count") {
     import java.nio.file.{Files, Paths}
-    val srcDir = "/root/repo/target/scratch/stale_src"
+    val srcDir = graft.operators.Lake.scratch("stale_src")
     val tab = "graft_stale_test"
     def writeSrc(tag: String): Unit =
       Tables.region(spark, sfDir).withColumn("tag", lit(tag))

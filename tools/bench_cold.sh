@@ -26,11 +26,22 @@ d_corpus_curate,d_embed_neardup,s_ann_bruteforce,s_ann_ivf_partitioned,\
 s_ann_pq,t_ngram_freq,t_lang_id,st_session_window,st_stream_neardup,\
 lake_zorder,q_bloom_join,g_pagerank"
 
+# Bench writes docs/bench_only.json; a copy left by an earlier run
+# must never pass for this run's result, so remove it first, let a
+# failing sbt/Bench stop the script (pipefail), and copy only a file
+# written after this run started.
+rm -f docs/bench_only.json
+MARK=$(mktemp)
+trap 'rm -f "$MARK"' EXIT
 SPARK_GRAFT_SF_DIR="${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1}" \
 SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}" \
 SPARK_GRAFT_ONLY="$OPS" \
-  sbt -batch "runMain graft.Bench" 2>/dev/null | grep '"metric"' || true
+  sbt -batch "runMain graft.Bench" 2>/dev/null | grep '"metric"'
 
+if [ ! -f docs/bench_only.json ] || [ ! docs/bench_only.json -nt "$MARK" ]; then
+  echo "bench_cold: docs/bench_only.json missing or older than this run" >&2
+  exit 1
+fi
 cp docs/bench_only.json docs/bench_cold.json
 echo "wrote docs/bench_cold.json"
 
