@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{GraftQuery, Tables}
+import graft.{GraftQuery, SessionMemo, Tables}
 import graft.functions.Parity._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -705,35 +705,9 @@ object Analytics {
       .groupBy(col("part_a"), col("part_b"))
       .agg(count(lit(1)).as("support"))
       .filter(col("support") >= 2)
-    // Sweep entries owned by STOPPED sessions on every access (ADVICE
-    // r18): they can never be served again, accumulate forever in a
-    // long-lived JVM, and a recycled System.identityHashCode on a new
-    // SparkSession could otherwise match a stale key and serve a frame
-    // bound to a dead session. Their blocks died with the session —
-    // no unpersist. The `eq`-guard below covers the same-key case.
-    import scala.jdk.CollectionConverters._
-    supMemo.entrySet().asScala.toSeq
-      .filter(_.getValue.sparkSession.sparkContext.isStopped)
-      .foreach(e => supMemo.remove(e.getKey))
-    val df = Option(supMemo.get(key)).filter(_.sparkSession eq s).getOrElse {
-      val built = build.persist()
-      Option(supMemo.putIfAbsent(key, built))
-        .filter(_.sparkSession eq s) match {
-        case Some(prev) => built.unpersist(); prev
-        case None =>
-          // installs ours, replacing any same-key entry bound to a
-          // different session object (the recycled-hash hazard)
-          supMemo.put(key, built)
-          // evict the superseded content generation, if any
-          supMemo.keySet().asScala
-            .filter(k => k.session == key.session && k.dir == key.dir &&
-              k.sig != key.sig)
-            .foreach(k => Option(supMemo.remove(k)).foreach(_.unpersist()))
-          built
-      }
-    }
-    if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE) df.persist()
-    df
+    // evict the superseded content generation, if any
+    SessionMemo(supMemo, s, key)(k => k.session == key.session && k.dir == key.dir &&
+      k.sig != key.sig)(build)
   }
 
   /** Oracle CTE fragment ending in sp(part_a, part_b, support) —

@@ -75,7 +75,16 @@ object Lake {
     * below `p` are sidecars (_SUCCESS, _quota, checksums), skipped as
     * Spark's file index skips them; any other non-`.parquet` entry
     * THROWS, naming it — a metadata probe fails closed rather than
-    * under-count what a read of the same path would see or refuse. */
+    * under-count what a read of the same path would see or refuse.
+    *
+    * Bound: the walk, and the footer reads of `footerRows`,
+    * `Namespace.quotaUsage` and safe-mode verification over its result, run
+    * sequentially on the driver — one listing per directory and one
+    * footer open per part file, so a probe costs O(dirs + part files)
+    * metadata round trips and no Spark job. That is cheap at commit
+    * granularity (tens to thousands of part files); a table of
+    * millions of part files would want the footer reads spread over
+    * executors instead. */
   def dataFiles(fs: FileSystem, p: Path): Seq[FileStatus] = {
     def below(st: FileStatus): Seq[FileStatus] = {
       val name = st.getPath.getName

@@ -563,12 +563,14 @@ object Namespace {
   /** CHECKPOINT CADENCE (reference server/namenode/Checkpointer.java:1
     * — the image is rewritten when the edit log outgrows a threshold,
     * not on every commit; SecondaryNameNode.java:1): replay cost is
-    * bounded by checkpointing ON A CADENCE. maybeCheckpoint reads the
-    * journal (metadata) and compacts only when commits-since-image
-    * exceed the threshold — at 100 TB this is the difference between
-    * paying an image write per commit and paying it per N commits
-    * while replay stays O(N). Here: 4 slice commits trip a cadence of
-    * 3 (one image write), the follow-up call declines (replay = 1),
+    * bounded by checkpointing ON A CADENCE. maybeCheckpoint replays
+    * the journal head (metadata) and images only when
+    * commits-since-image exceed the threshold. The image is a
+    * METADATA image — a journal commit re-listing the active set, no
+    * data copied (the reference's fsimage) — so at 100 TB the cadence
+    * costs one small log file per N commits while head replay stays
+    * O(N). Here: 4 slice commits trip a cadence of 3 (one metadata
+    * image, no data write), the follow-up call declines (replay = 0),
     * and a post-image append replays from the image — content equals
     * the full table either way, which is what the oracle checks. */
   val lakeCheckpointCadence: GraftQuery = GraftQuery.sql(
@@ -584,8 +586,8 @@ object Namespace {
     // down all five slice dirs; the five commits are then pure
     // journal metadata. Replay-identical to one write per commit —
     // each version references exactly the same rows — but the
-    // sequential Spark-job depth is layout(1) + image(1) + final
-    // read, not one table scan per commit.
+    // sequential Spark-job depth is layout(1) + final read (the
+    // metadata image schedules no job), not one table scan per commit.
     o.withColumn("m", pmod(col("o_orderkey"), lit(5)))
       .write.partitionBy("m").mode("overwrite").parquet(s"$dir/data")
     (0 to 3).foreach(r =>
@@ -594,7 +596,7 @@ object Namespace {
     val v = CommitLog.maybeCheckpoint(s, dir, ts = 5000L, maxReplay = 3)
     require(v.nonEmpty, "4 commits over a cadence of 3 must checkpoint")
     require(CommitLog.maybeCheckpoint(s, dir, ts = 6000L, maxReplay = 3).isEmpty,
-      "replay of 1 right after the image must decline")
+      "replay of 0 right after the image must decline")
     CommitLog.commit(fs, dir, ts = 7000L, adds = Seq("data/m=4"), removes = Seq.empty)
     CommitLog.snapshot(s, dir)
       .groupBy(col("o_orderpriority"))
@@ -609,7 +611,9 @@ object Namespace {
     * threshold); this is the OPERATOR's verb — "image now, before I
     * do something risky" — at any replay length except zero: when the
     * journal head is already an image the verb DECLINES instead of
-    * stamping a redundant image. Ceremony: three slice commits, an
+    * stamping a redundant image. Each save commits a metadata image
+    * (the active set re-listed in the journal, no data copied).
+    * Ceremony: three slice commits, an
     * explicit save (images at any replay length — the cadence would
     * not have fired), a second save that must decline, a post-image
     * append, and a final save that images again. After each save,
@@ -617,7 +621,7 @@ object Namespace {
     * contract. All requires assert the verb's state machine; the
     * oracle pins the contract constants plus the head content
     * (count + exact cents total) recomputed from the source table —
-    * an image that lost or duplicated rows fails the gate. */
+    * an image that lost or duplicated an entry fails the gate. */
   val lakeSaveNamespace: GraftQuery = GraftQuery.sql(
     "lake_save_namespace",
     """SELECT 'declined_when_fresh' AS check_name, CAST(1 AS BIGINT) AS n

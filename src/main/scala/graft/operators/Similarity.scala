@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{GraftQuery, Tables}
+import graft.{GraftQuery, SessionMemo, Tables}
 import graft.functions.{Shingles, Vectors}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -49,41 +49,10 @@ object Similarity {
 
   private def famMemoized(s: SparkSession, d: String, tag: String, sig: String)
                          (build: => DataFrame): DataFrame = {
-    // NOT computeIfAbsent: builds nest on this map (cells_layout →
-    // acells → corpus), and a nested computeIfAbsent on one
-    // ConcurrentHashMap throws "recursive update" whenever two keys
-    // land in the same bin — the api.Graft.dedup memo's documented
-    // hazard. get/putIfAbsent tolerates nesting; a racing duplicate
-    // build just unpersists its copy.
     val key = FamKey(System.identityHashCode(s), d, tag, sig)
-    // Sweep entries owned by STOPPED sessions on every access (ADVICE
-    // r18, the supMemo discipline): dead-session entries accumulate in
-    // a long-lived JVM and a recycled identityHashCode could serve a
-    // frame bound to a dead session. No unpersist — the blocks died
-    // with the session.
-    import scala.jdk.CollectionConverters._
-    famMemo.entrySet().asScala.toSeq
-      .filter(_.getValue.sparkSession.sparkContext.isStopped)
-      .foreach(e => famMemo.remove(e.getKey))
-    val df = Option(famMemo.get(key)).filter(_.sparkSession eq s).getOrElse {
-      val built = build.persist()
-      Option(famMemo.putIfAbsent(key, built))
-        .filter(_.sparkSession eq s) match {
-        case Some(prev) => built.unpersist(); prev
-        case None =>
-          // installs ours, replacing any same-key entry bound to a
-          // different session object (the recycled-hash hazard)
-          famMemo.put(key, built)
-          // evict the superseded source-content generation, if any
-          famMemo.keySet().asScala
-            .filter(k => k.session == key.session && k.dir == key.dir &&
-              k.tag == key.tag && k.sig != key.sig)
-            .foreach(k => Option(famMemo.remove(k)).foreach(_.unpersist()))
-          built
-      }
-    }
-    if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE) df.persist()
-    df
+    // evict the superseded source-content generation, if any
+    SessionMemo(famMemo, s, key)(k => k.session == key.session && k.dir == key.dir &&
+      k.tag == key.tag && k.sig != key.sig)(build)
   }
 
   /** Normalized corpus: (vec_id, v, nrm). Zero-norm vectors are

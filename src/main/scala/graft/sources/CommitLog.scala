@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.operators.Lake
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{DataType, StructType}
 
@@ -17,12 +17,13 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *   _log/000000000.log     one file per committed version
   *   _log/000000001.log
   *   data/<name>/...        parquet data, referenced by log actions
+  *   data/ckpt-<N>/...      a data image's copy of the active set
   * }}}
   *
   * Each log file is a tiny text journal: `ts <millis>` then one
   * `add <relpath>` / `remove <relpath>` per line, closed by `end`. A
-  * commit whose data it wrote itself (`writeCommit`, the `checkpoint`
-  * image) also records `schema <json>`: the Spark row schema of that
+  * commit whose data it wrote itself (`writeCommit`, a data image)
+  * also records `schema <json>`: the Spark row schema of that
   * data, taken on the driver from the footer of one part file it just
   * wrote, decoded as Spark's own inference decodes it (in the nullable
   * form every parquet read gives its columns). Readers ignore
@@ -35,10 +36,31 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * reference's single-writer edit log; cf. LeaseManager.java:63 for
   * the lease-based variant used on the streaming state swap).
   *
+  * IMAGES. A commit marked `ckpt` is an image: its adds are the full
+  * active set after it, so replay may start at it. It takes two forms:
+  *  - a METADATA image (`maybeCheckpoint`, `saveNamespace`): one
+  *    `add` per active entry, in active order, no removes, and the
+  *    schema when every active entry records the same one — the
+  *    reference's fsimage, a serialized namespace with no block
+  *    copied. 0 Spark jobs, 0 data bytes;
+  *  - a DATA image (`checkpoint`): the active set copied into
+  *    `data/ckpt-<N>`, committed as `add` of that dir plus `remove` of
+  *    every active entry — the explicit verb for rewriting the files
+  *    (and for making a shallow clone fully local).
+  * `drain` commits the same shape as a metadata image (survivors
+  * re-listed) plus its one rewritten dir.
+  *
   * Reads reconstruct the active file set at any version (`snapshot`)
   * or wall-clock instant (`snapshotAsOf`) by replaying the log — pure
   * driver-side metadata ops (a NameNode replaying edits), after which
-  * the data read is an ordinary pruned parquet scan. Every read goes
+  * the data read is an ordinary pruned parquet scan. HEAD reads
+  * (`snapshot` and `activeFiles` at their default version,
+  * `snapshotWithInflight`, the cadence's replay count,
+  * `saveNamespace`'s head check) list `_log`
+  * once and read it newest-first down to the first complete image, so
+  * their cost is bounded by the commits since that image, not by the
+  * history; versioned and as-of reads, and the ceremonies' journal
+  * reads, replay the full log. Every read goes
   * through one reader (`read`): when EVERY entry it reads carries the
   * same recorded schema, that schema is handed to Spark and resolving
   * the snapshot schedules no job (a NameNode never opens a block to
@@ -48,9 +70,10 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * would for any parquet read. Both give the same schema: when all
   * footers agree, inference over any of them returns the recorded one.
   * At 100 TB the
-  * log stays tiny (it scales with commits, not data), replay is
-  * O(versions), and nothing ever rewrites a data file: version reads
-  * are stable under concurrent appends.
+  * log stays tiny (it scales with commits, not data), head replay is
+  * O(commits since the newest image), and no data file is ever
+  * rewritten in place: version reads are stable under concurrent
+  * appends.
   */
 object CommitLog {
 
@@ -70,47 +93,74 @@ object CommitLog {
                           isCheckpoint: Boolean = false, tags: Set[String] = Set.empty,
                           schema: Option[String] = None)
 
-  /** All committed versions in order (driver-side metadata read). A
-    * log file without the terminal `end` marker is a commit that died
-    * mid-write: its version number is burned but it carries NO
-    * actions — the unclosed-edit-log-segment rule, so a torn write
-    * can never surface as a half-applied commit. */
-  def commits(fs: FileSystem, tableDir: String): Seq[Commit] = {
+  /** The version files under `_log`, oldest first (one listing). */
+  private def logFiles(fs: FileSystem, tableDir: String): Seq[FileStatus] = {
     val dir = logDir(tableDir)
-    if (!fs.exists(dir)) return Seq.empty
-    fs.listStatus(dir).toSeq
-      .filter(_.getPath.getName.endsWith(".log"))
+    if (!fs.exists(dir)) Seq.empty
+    else fs.listStatus(dir).toSeq.filter(_.getPath.getName.endsWith(".log"))
       .sortBy(_.getPath.getName)
-      .flatMap { st =>
-        val in = fs.open(st.getPath)
-        val text =
-          try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
-          finally in.close()
-        val lines = text.linesIterator.map(_.trim).filter(_.nonEmpty).toSeq
-        if (!lines.lastOption.contains("end")) None
-        else {
-          val ts = lines.collectFirst { case l if l.startsWith("ts ") => l.drop(3).toLong }
-            .getOrElse(0L)
-          Some(Commit(
-            st.getPath.getName.stripSuffix(".log").toInt, ts,
-            lines.collect { case l if l.startsWith("add ") => l.drop(4) },
-            lines.collect { case l if l.startsWith("remove ") => l.drop(7) },
-            isCheckpoint = lines.contains("ckpt"),
-            tags = lines.collect { case l if l.startsWith("tag ") => l.drop(4) }.toSet,
-            schema = lines.collectFirst { case l if l.startsWith("schema ") => l.drop(7) }))
-        }
-      }
   }
+
+  private def versionOf(st: FileStatus): Int = st.getPath.getName.stripSuffix(".log").toInt
+
+  /** One log file parsed. A log file without the terminal `end` marker
+    * is a commit that died mid-write: its version number is burned but
+    * it carries NO actions — the unclosed-edit-log-segment rule, so a
+    * torn write can never surface as a half-applied commit. */
+  private def readCommit(fs: FileSystem, st: FileStatus): Option[Commit] = {
+    val in = fs.open(st.getPath)
+    val text =
+      try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
+      finally in.close()
+    val lines = text.linesIterator.map(_.trim).filter(_.nonEmpty).toSeq
+    if (!lines.lastOption.contains("end")) None
+    else {
+      val ts = lines.collectFirst { case l if l.startsWith("ts ") => l.drop(3).toLong }
+        .getOrElse(0L)
+      Some(Commit(
+        versionOf(st), ts,
+        lines.collect { case l if l.startsWith("add ") => l.drop(4) },
+        lines.collect { case l if l.startsWith("remove ") => l.drop(7) },
+        isCheckpoint = lines.contains("ckpt"),
+        tags = lines.collect { case l if l.startsWith("tag ") => l.drop(4) }.toSet,
+        schema = lines.collectFirst { case l if l.startsWith("schema ") => l.drop(7) }))
+    }
+  }
+
+  /** All committed versions in order (driver-side metadata read);
+    * burned versions (see `readCommit`) are skipped. */
+  def commits(fs: FileSystem, tableDir: String): Seq[Commit] =
+    logFiles(fs, tableDir).flatMap(readCommit(fs, _))
+
+  /** The HEAD replay: the newest complete image commit and every
+    * complete commit after it, in order — all a head read needs,
+    * because an image's adds are the full active set after it. One
+    * listing, then log files newest-first until the first image, so a
+    * head resolve opens (commits since the image + 1) files whatever
+    * the history's length; with no image it is the full log. */
+  private def headCommits(fs: FileSystem, tableDir: String): Seq[Commit] = {
+    val newestFirst = logFiles(fs, tableDir).reverseIterator.flatMap(readCommit(fs, _))
+    var oldestFirst = List.empty[Commit]
+    var atImage = false
+    while (!atImage && newestFirst.hasNext) {
+      val c = newestFirst.next()
+      oldestFirst = c :: oldestFirst
+      atImage = c.isCheckpoint
+    }
+    oldestFirst
+  }
+
+  /** The commits a read at `version` replays: the head (the default,
+    * `Int.MaxValue`) from its newest image, any other version the full
+    * log through it. */
+  private def replayTo(fs: FileSystem, tableDir: String, version: Int): Seq[Commit] =
+    if (version == Int.MaxValue) headCommits(fs, tableDir)
+    else commits(fs, tableDir).filter(_.version <= version)
 
   /** Highest version number present in the log dir, committed or
     * burned — the next attempt must go past both. */
-  private def maxVersionOnDisk(fs: FileSystem, tableDir: String): Option[Int] = {
-    val dir = logDir(tableDir)
-    if (!fs.exists(dir)) None
-    else fs.listStatus(dir).toSeq
-      .map(_.getPath.getName).filter(_.endsWith(".log"))
-      .map(_.stripSuffix(".log").toInt).maxOption
-  }
+  private def maxVersionOnDisk(fs: FileSystem, tableDir: String): Option[Int] =
+    logFiles(fs, tableDir).map(versionOf).maxOption
 
   /** Journal read STABLE against in-flight writers. tryCommit's
     * create-then-write leaves a sub-millisecond window where a
@@ -152,14 +202,8 @@ object CommitLog {
     new java.util.concurrent.ConcurrentHashMap[String, (Long, Long)]()
 
   private def stableCommits(fs: FileSystem, tableDir: String): Seq[Commit] = {
-    def allOnDisk(): Seq[(Int, Long, Long)] = {
-      val dir = logDir(tableDir)
-      if (!fs.exists(dir)) Seq.empty
-      else fs.listStatus(dir).toSeq
-        .filter(_.getPath.getName.endsWith(".log"))
-        .map(st => (st.getPath.getName.stripSuffix(".log").toInt,
-          st.getLen, st.getModificationTime))
-    }
+    def allOnDisk(): Seq[(Int, Long, Long)] =
+      logFiles(fs, tableDir).map(st => (versionOf(st), st.getLen, st.getModificationTime))
     def unknown(listing: Seq[(Int, Long, Long)],
                 known: Set[Int]): Seq[(Int, Long, Long)] =
       listing.filter { case (v, _, _) => !known.contains(v) }
@@ -524,7 +568,7 @@ object CommitLog {
     * wrong. Every consumer of "what files is the table at version N"
     * must come through here (or snapshot), never reimplement replay. */
   def activeFiles(fs: FileSystem, tableDir: String, version: Int = Int.MaxValue): Seq[String] =
-    activeSet(commits(fs, tableDir).filter(_.version <= version))
+    activeSet(replayTo(fs, tableDir, version))
 
   /** Active (relative) file set after replaying the log through the
     * given versions. */
@@ -555,7 +599,7 @@ object CommitLog {
   /** Read the table as of a version (default: latest). */
   def snapshot(spark: SparkSession, tableDir: String, version: Int = Int.MaxValue): DataFrame = {
     val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    val entries = activeEntries(commits(fs, tableDir).filter(_.version <= version))
+    val entries = activeEntries(replayTo(fs, tableDir, version))
     require(entries.nonEmpty, s"no active files in $tableDir at version $version")
     read(spark, tableDir, entries)
   }
@@ -569,14 +613,30 @@ object CommitLog {
     read(spark, tableDir, entries)
   }
 
-  /** FSImage-style checkpoint: materialize the CURRENT active set
-    * into one compacted image dir, then commit (add image, remove
-    * every active file) — the image+journal pairing of the reference
-    * (FSImage.java checkpoint absorbs the edit log; later reads of
-    * the head replay just the image commit forward). Older versions
-    * keep reading their original files, which stay on disk until a
-    * retention pass drops their versions. Returns the image version. */
-  def checkpoint(spark: SparkSession, tableDir: String, ts: Long): Int = {
+  /** DATA IMAGE — the explicit materializing verb: copy the CURRENT
+    * active set into one compacted dir `data/ckpt-N`, then commit (add
+    * the image, remove every active file) under the image marker.
+    * Older versions keep reading their original files, which stay on
+    * disk until a retention pass drops their versions. This is the
+    * verb that makes a shallow clone fully local, and the one to call
+    * when the table's files should be rewritten; the cadence and
+    * `saveNamespace` write metadata images instead. Returns the image
+    * version. */
+  def checkpoint(spark: SparkSession, tableDir: String, ts: Long): Int =
+    commitImage(spark, tableDir, ts, materialize = true)
+
+  /** The one commit path of both image forms. A data image
+    * (`materialize`) writes the active set into `data/ckpt-N` and
+    * commits `add` of it plus `remove` of every active entry, with the
+    * schema read back from what it wrote. A METADATA image (the
+    * reference's fsimage: the serialized namespace, no block copied)
+    * commits `add` of every active entry in active order and no
+    * remove, carrying the schema only when every active entry records
+    * the same one: 0 Spark jobs, 0 data bytes. Full replay through it
+    * is unchanged (a re-add keeps its position), and head replay may
+    * start at it. */
+  private def commitImage(spark: SparkSession, tableDir: String, ts: Long,
+                          materialize: Boolean): Int = {
     val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
     if (isFrozen(fs, tableDir))
       throw new java.io.IOException(
@@ -590,15 +650,22 @@ object CommitLog {
     val active = entries.map(_._1)
     require(active.nonEmpty, s"nothing to checkpoint in $tableDir")
     val image = s"data/ckpt-$next"
-    read(spark, tableDir, entries).write.mode("overwrite").parquet(s"$tableDir/$image")
+    val (adds, removes, schema) =
+      if (materialize) {
+        read(spark, tableDir, entries).write.mode("overwrite").parquet(s"$tableDir/$image")
+        (Seq(image), active, writtenSchema(spark, fs, s"$tableDir/$image"))
+      } else (active, Nil, entries.map(_._2).distinct match {
+        case Seq(uniform) => uniform
+        case _ => None
+      })
     // Compare-and-swap, not blind retry: the image reflects the active
     // set AS OF the journal read above, so it may only commit at the exact next
     // version. If a concurrent writer got there first, retrying at a
     // higher version would resurrect whatever that writer removed —
-    // delete the stale image and make the caller redo the checkpoint.
-    if (!tryCommit(fs, tableDir, next, ts, adds = Seq(image), removes = active,
-        checkpointMarker = true, schema = writtenSchema(spark, fs, s"$tableDir/$image"))) {
-      fs.delete(new Path(tableDir, image), true)
+    // delete a stale data image and make the caller redo the checkpoint.
+    if (!tryCommit(fs, tableDir, next, ts, adds, removes, checkpointMarker = true,
+        schema = schema)) {
+      if (materialize) fs.delete(new Path(tableDir, image), true)
       throw new java.util.ConcurrentModificationException(
         s"$tableDir advanced past version $next during checkpoint — retry")
     }
@@ -608,19 +675,20 @@ object CommitLog {
   /** CHECKPOINT CADENCE — the reference's automatic image policy
     * (server/namenode/Checkpointer.java:1 triggers a checkpoint when
     * the edit log outgrows a threshold; SecondaryNameNode.java:1 is
-    * the daemon form): checkpoint only when replay cost — commits
-    * since the last image (or since v0) — exceeds `maxReplay`. The
-    * decision is a driver-side metadata read; below threshold the
-    * call is free. Returns the image version, or None if replay is
-    * still cheap. Idempotent at the cadence level: a call right
-    * after a triggered checkpoint sees replay length 1 and declines. */
+    * the daemon form): commit a metadata image only when replay cost —
+    * commits since the last image (or since v0) — exceeds `maxReplay`.
+    * The decision is a head replay, which the cadence itself keeps to
+    * at most `maxReplay` + 1 log files, and the image is metadata only,
+    * so the cadence never rewrites the table. Returns the image version, or
+    * None if replay is still cheap. Idempotent at the cadence level: a
+    * call right after a triggered image sees replay length 0 and
+    * declines. */
   def maybeCheckpoint(spark: SparkSession, tableDir: String, ts: Long,
                       maxReplay: Int): Option[Int] = {
     val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    val cs = commits(fs, tableDir)
-    val lastCkpt = cs.filter(_.isCheckpoint).lastOption.map(_.version).getOrElse(-1)
-    val replay = cs.count(_.version > lastCkpt)
-    if (replay > maxReplay) Some(checkpoint(spark, tableDir, ts)) else None
+    val replay = headCommits(fs, tableDir).count(!_.isCheckpoint)
+    if (replay > maxReplay) Some(commitImage(spark, tableDir, ts, materialize = false))
+    else None
   }
 
   /** SAVE NAMESPACE — the admin's explicit image-NOW verb (reference
@@ -632,12 +700,13 @@ object CommitLog {
     * an image the namespace on disk IS the namespace in memory, and
     * the verb declines rather than stamping a redundant image (the
     * reference's no-op when nothing changed since the last
-    * checkpoint). Returns the image version, None when declined.
-    * After a successful save, replay-from-image is 0 commits. */
+    * checkpoint). The image is a metadata image, like the cadence's.
+    * Returns the image version, None when declined. After a
+    * successful save, replay-from-image is 0 commits. */
   def saveNamespace(spark: SparkSession, tableDir: String, ts: Long): Option[Int] = {
     val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    if (commits(fs, tableDir).lastOption.exists(_.isCheckpoint)) None
-    else Some(checkpoint(spark, tableDir, ts))
+    if (headCommits(fs, tableDir).lastOption.exists(_.isCheckpoint)) None
+    else Some(commitImage(spark, tableDir, ts, materialize = false))
   }
 
   // ------------------------------------------------------------------
@@ -692,9 +761,7 @@ object CommitLog {
       .getOrElse(throw new IllegalArgumentException(
         s"no checkpoint at or before version $v in $tableDir — checkpoint() first"))
     // delete every log file below the cut, committed or burned
-    val dropped = fs.listStatus(logDir(tableDir)).toSeq
-      .map(_.getPath.getName).filter(_.endsWith(".log"))
-      .map(_.stripSuffix(".log").toInt).filter(_ < cut.version).sorted
+    val dropped = logFiles(fs, tableDir).map(versionOf).filter(_ < cut.version)
     dropped.foreach(d => fs.delete(logFile(tableDir, d), false))
     vacuumOrphans(fs, tableDir, graceMs)
     dropped
@@ -704,13 +771,17 @@ object CommitLog {
     * node (server/namenode/BackupNode.java:1 receives streamed edits,
     * BackupImage.java:1 applies them to its own image): copy every
     * journal version the standby lacks, byte-identical, plus the data
-    * dirs those versions add. Per ship the cost is proportional to
-    * the DELTA (new log files + newly-added data), never the table:
+    * dirs those versions add that are not already active on the
+    * standby at the version before. Per ship the cost is proportional
+    * to the DELTA (new log files + newly-added data), never the table:
     * a ship with no new commits touches only the two log listings,
-    * and a metadata-only commit (remove/restore/tag) ships as one
-    * tiny log file. Data dirs are copied BEFORE their log file so a
-    * torn ship can never leave the standby's journal referencing
-    * data it does not hold (the closed-segment rule: the log file is
+    * and a metadata-only commit (remove/restore/tag, a metadata image,
+    * the survivors `drain` re-lists) ships as one tiny log file. An add
+    * the standby does not hold active (new, or removed and re-added)
+    * replaces whatever sits at its path: a directory copy onto an
+    * existing directory would nest inside it. Data dirs are copied
+    * BEFORE their log file so a torn ship can never leave the
+    * standby's journal referencing data it does not hold (the closed-segment rule: the log file is
     * the commit point on the standby too). Removes need no I/O — the
     * standby keeps the dropped dirs until its own retention pass,
     * exactly like a backup namenode holding blocks until its own
@@ -740,30 +811,30 @@ object CommitLog {
         s"$standbyDir is retired (failed storage): re-admit it via " +
           "restoreFailedStorage before shipping")
     if (!fs.exists(logDir(primaryDir))) return Seq.empty // nothing committed yet
-    val have = commits(fs, standbyDir).map(c => logFile(standbyDir, c.version).getName).toSet
+    val held = commits(fs, standbyDir)
+    val have = held.map(_.version).toSet
     val conf = spark.sparkContext.hadoopConfiguration
     fs.mkdirs(logDir(standbyDir))
-    val byVersion = commits(fs, primaryDir).map(c => c.version -> c).toMap
-    val pending = fs.listStatus(logDir(primaryDir)).toSeq
-      .filter { st =>
-        val n = st.getPath.getName
-        n.endsWith(".log") && !have(n) &&
-          byVersion.contains(n.stripSuffix(".log").toInt) // completed only
-      }
-      .sortBy(_.getPath.getName)
-    pending.map { st =>
-      val v = st.getPath.getName.stripSuffix(".log").toInt
-      byVersion.get(v).foreach { c =>
-        c.adds.filterNot(_.startsWith("/")).foreach { rel =>
-          org.apache.hadoop.fs.FileUtil.copy(
-            fs, new Path(primaryDir, rel), fs, new Path(standbyDir, rel),
-            false, true, conf)
+    // completed primary commits only, in version order
+    val pending = commits(fs, primaryDir).filterNot(c => have(c.version))
+    def copy(from: Path, to: Path): Unit = {
+      org.apache.hadoop.fs.FileUtil.copy(fs, from, fs, to, false, true, conf); ()
+    }
+    // one ordered fold over the standby's journal as it will read: the
+    // standby's active set before each shipped version decides its copies
+    val active = scala.collection.mutable.Set.empty[String]
+    (held ++ pending).sortBy(_.version).flatMap { c =>
+      val shipped = !have(c.version)
+      if (shipped) {
+        c.adds.filterNot(rel => rel.startsWith("/") || active(rel)).foreach { rel =>
+          val to = new Path(standbyDir, rel)
+          fs.delete(to, true)
+          copy(new Path(primaryDir, rel), to)
         }
+        copy(logFile(primaryDir, c.version), logFile(standbyDir, c.version))
       }
-      org.apache.hadoop.fs.FileUtil.copy(
-        fs, st.getPath, fs, new Path(logDir(standbyDir), st.getPath.getName),
-        false, true, conf)
-      v
+      active ++= c.adds; active --= c.removes
+      if (shipped) Some(c.version) else None
     }
   }
 
@@ -1167,7 +1238,7 @@ object CommitLog {
     * open-for-read-with-flushed-length path. */
   def snapshotWithInflight(spark: SparkSession, tableDir: String): DataFrame = {
     val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    val committed = activeEntries(commits(fs, tableDir))
+    val committed = activeEntries(headCommits(fs, tableDir))
     val flushed = flushedAdds(fs, tableDir).values.flatten.toSeq.distinct
       .filterNot(committed.map(_._1).toSet)
     val all = committed ++ flushed.map(_ -> None)

@@ -856,4 +856,135 @@ class CommitLogSpec extends SparkSpec {
     fs.delete(new Path(s"$dir/data/q/notes.txt"), false)
     assert(CommitLog.reportVerified(spark, dir, Seq("data/q")) == ((2, 2, false)))
   }
+
+  // ---- metadata images and head replay ------------------------------
+
+  /** Every path under the table's `data/` dir. */
+  private def dataPaths(dir: String): Set[String] = {
+    val it = fs.listFiles(new Path(s"$dir/data"), true)
+    val out = Set.newBuilder[String]
+    while (it.hasNext) out += it.next().getPath.toString
+    out.result()
+  }
+
+  test("cadence and saveNamespace images re-list the active set in order: no data, no job") {
+    val dir = freshTable("meta_image")
+    CommitLog.writeCommit(spark, dir, typed(0, 20), "data/a", ts = 100L)
+    CommitLog.writeCommit(spark, dir, typed(20, 30), "data/b", ts = 200L)
+    CommitLog.writeCommit(spark, dir, typed(30, 50), "data/c", ts = 300L)
+    CommitLog.commit(fs, dir, 400L, Nil, Seq("data/b"))
+    CommitLog.writeCommit(spark, dir, typed(50, 60), "data/b", ts = 500L) // re-added: now last
+    val active = CommitLog.activeFiles(fs, dir)
+    assert(active == Seq("data/a", "data/c", "data/b"))
+    val before = dataPaths(dir)
+    val (v, jobs) = jobsDuring(CommitLog.maybeCheckpoint(spark, dir, ts = 600L, maxReplay = 3))
+    assert(v.contains(5) && jobs == 0, s"cadence image $v scheduled $jobs jobs")
+    val img = CommitLog.commits(fs, dir).last
+    assert(img.isCheckpoint && img.adds == active && img.removes.isEmpty && img.tags.isEmpty)
+    assert(img.schema == CommitLog.commits(fs, dir).head.schema && img.schema.isDefined,
+      "a uniform schema rides on the image")
+    assert(dataPaths(dir) == before, "a metadata image writes no data")
+    sameRead(CommitLog.snapshot(spark, dir), inferred(dir))
+    // mixed schemas: the saveNamespace image records none
+    CommitLog.writeCommit(spark, dir, typed(60, 70).drop("m"), "data/d", ts = 700L)
+    val before2 = dataPaths(dir)
+    val (v2, jobs2) = jobsDuring(CommitLog.saveNamespace(spark, dir, ts = 800L))
+    assert(v2.contains(7) && jobs2 == 0, s"saveNamespace image $v2 scheduled $jobs2 jobs")
+    val img2 = CommitLog.commits(fs, dir).last
+    assert(img2.isCheckpoint && img2.adds == active :+ "data/d" && img2.removes.isEmpty)
+    assert(img2.schema.isEmpty, "mixed schemas: the image records none")
+    assert(dataPaths(dir) == before2)
+    sameRead(CommitLog.snapshot(spark, dir), inferred(dir))
+    // a frozen table refuses the image before any journal I/O
+    CommitLog.freeze(fs, dir)
+    intercept[java.io.IOException] {
+      CommitLog.maybeCheckpoint(spark, dir, ts = 900L, maxReplay = -1)
+    }
+    CommitLog.unfreeze(fs, dir)
+    assert(CommitLog.commits(fs, dir).last.version == 7)
+  }
+
+  test("head replay from the newest image equals full replay across mixed histories") {
+    val n = 6
+    Seq(3, 11, 29).foreach { seed =>
+      val dir = freshTable(s"head_replay_$seed")
+      (0 until n).foreach(i =>
+        spark.range(i * 10L, i * 10L + 10).write.parquet(s"$dir/data/s$i"))
+      val rnd = new scala.util.Random(seed)
+      def head: Int = CommitLog.commits(fs, dir).last.version
+      CommitLog.commit(fs, dir, 100L, Seq("data/s0"), Nil)
+      (1 to 36).foreach { step =>
+        val ts = 100L + step
+        val active = CommitLog.activeFiles(fs, dir, head)
+        step match {
+          case 9 | 27 => // drain one active entry into a fresh dir
+            CommitLog.drain(spark, dir, active(rnd.nextInt(active.size)), s"data/d$step", ts)
+          case 18 => CommitLog.checkpoint(spark, dir, ts) // data image
+          case _ => rnd.nextInt(6) match {
+            case 0 | 1 =>
+              CommitLog.commit(fs, dir, ts, Seq(s"data/s${rnd.nextInt(n)}"), Nil)
+            case 2 if active.size > 1 =>
+              CommitLog.commit(fs, dir, ts, Nil, Seq(active(rnd.nextInt(active.size))))
+            case 3 =>
+              val back = rnd.nextInt(head + 1)
+              if (CommitLog.activeFiles(fs, dir, back).nonEmpty)
+                CommitLog.restore(fs, dir, back, ts)
+            case 4 => CommitLog.saveNamespace(spark, dir, ts)
+            case _ => CommitLog.maybeCheckpoint(spark, dir, ts, maxReplay = 2)
+          }
+        }
+        assert(CommitLog.activeFiles(fs, dir) == CommitLog.activeFiles(fs, dir, head),
+          s"seed $seed step $step: head replay diverged from full replay")
+      }
+      val cs = CommitLog.commits(fs, dir)
+      assert(cs.exists(c => c.isCheckpoint && c.tags.isEmpty && c.removes.isEmpty),
+        s"seed $seed: no metadata image in the history")
+      assert(cs.exists(_.tags("drain")) &&
+        cs.exists(c => c.adds == Seq(s"data/ckpt-${c.version}")), s"seed $seed: no drain or data image")
+      sameRead(CommitLog.snapshot(spark, dir), CommitLog.snapshot(spark, dir, head))
+    }
+  }
+
+  test("500 commits at cadence 10: a head resolve opens only the newest image and what follows") {
+    val dir = freshTable("head_bound")
+    (0 until 8).foreach(i => spark.range(i * 5L, i * 5L + 5).write.parquet(s"$dir/data/s$i"))
+    (0 until 500).foreach { i =>
+      CommitLog.commit(fs, dir, 1000L + i, Seq(s"data/s${i % 8}"), Seq(s"data/s${(i + 3) % 8}"))
+      CommitLog.maybeCheckpoint(spark, dir, 1000L + i, maxReplay = 10)
+    }
+    val cs = CommitLog.commits(fs, dir)
+    val image = cs.filter(_.isCheckpoint).last.version
+    val expected = CommitLog.activeFiles(fs, dir, cs.last.version)
+    val rows = CommitLog.snapshot(spark, dir, cs.last.version).count()
+    val logs = fs.listStatus(new Path(s"$dir/_log")).map(_.getPath)
+    val (pre, post) = logs.partition(p => p.getName.stripSuffix(".log").toInt < image)
+    assert(post.length <= 11 && pre.length > 400, s"${post.length} files from the image on")
+    // every pre-image log unreadable: a head resolve must never open one
+    pre.foreach { p =>
+      val out = fs.create(p, true)
+      try out.write("ts unreadable\nend\n".getBytes("UTF-8")) finally out.close()
+    }
+    assert(CommitLog.activeFiles(fs, dir) == expected)
+    assert(CommitLog.snapshot(spark, dir).count() == rows)
+    assert(CommitLog.maybeCheckpoint(spark, dir, 2000L, maxReplay = 10).isEmpty)
+    intercept[NumberFormatException] { CommitLog.snapshot(spark, dir, version = image - 1) }
+  }
+
+  test("retention at a metadata image keeps every live entry readable after vacuum") {
+    val dir = freshTable("meta_retention")
+    val r = Tables.region(spark, sfDir)
+    CommitLog.writeCommit(spark, dir, r.filter(col("r_regionkey") < 2), "data/a", ts = 100L)
+    CommitLog.writeCommit(spark, dir, r.filter(col("r_regionkey") === 2), "data/b", ts = 200L)
+    CommitLog.writeCommit(spark, dir, r.filter(col("r_regionkey") > 2), "data/c", ts = 300L)
+    CommitLog.commit(fs, dir, ts = 400L, adds = Nil, removes = Seq("data/b"))
+    val v = CommitLog.saveNamespace(spark, dir, ts = 500L).get
+    CommitLog.writeCommit(spark, dir, r.filter(col("r_regionkey") === 0), "data/d", ts = 600L)
+    val head = CommitLog.snapshot(spark, dir).collect().map(_.toString).sorted.toSeq
+    assert(CommitLog.dropHistoryBefore(fs, dir, v, graceMs = 0L) == (0 until v))
+    CommitLog.vacuumOrphans(fs, dir, graceMs = 0L)
+    assert(!fs.exists(new Path(s"$dir/data/b")), "the removed entry is reclaimed")
+    Seq("a", "c", "d").foreach(e => assert(fs.exists(new Path(s"$dir/data/$e")), e))
+    assert(CommitLog.snapshot(spark, dir).collect().map(_.toString).sorted.toSeq == head)
+    assert(CommitLog.snapshot(spark, dir, version = v).count() == r.count() - 1)
+  }
 }

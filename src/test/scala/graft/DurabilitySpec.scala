@@ -117,6 +117,47 @@ class DurabilitySpec extends SparkSpec {
     assert(CommitLog.snapshot(spark, standby).count() == 5 + 1) // image (all 5) + regionkey-0 batch
   }
 
+  test("ship copies only adds the standby lacks: no nested copy after drain, a metadata image ships data-free") {
+    val primary = fresh("held/primary")
+    val standby = fresh("held/standby")
+    val n = Tables.nation(spark, sfDir)
+    def slice(r: Int) = n.filter(col("n_nationkey") % 3 === r)
+    (0 to 2).foreach(r =>
+      CommitLog.writeCommit(spark, primary, slice(r), s"data/store$r", ts = 100L * (r + 1)))
+    assert(CommitLog.ship(spark, primary, standby) == Seq(0, 1, 2))
+    // drain re-lists the survivors store0 and store2, which the standby
+    // already holds: only the rewritten dir may be copied
+    val (dv, _) = CommitLog.drain(spark, primary, "data/store1", "data/absorbed1", ts = 400L)
+    assert(CommitLog.ship(spark, primary, standby) == Seq(dv))
+    Seq("store0", "store2").foreach { st =>
+      assert(!fs.exists(new Path(s"$standby/data/$st/$st")), s"nested copy of $st on the standby")
+    }
+    def footer(dir: String): Long =
+      graft.operators.Lake.footerRows(spark, CommitLog.activeFiles(fs, dir).map(p => s"$dir/$p"))
+    assert(footer(standby) == footer(primary) && footer(primary) == n.count())
+    // a metadata image ships as one log file: no data file changes
+    def dataFiles(dir: String): Map[String, (Long, Long)] = {
+      val it = fs.listFiles(new Path(s"$dir/data"), true)
+      val out = Map.newBuilder[String, (Long, Long)]
+      while (it.hasNext) {
+        val st = it.next(); out += st.getPath.toString -> ((st.getLen, st.getModificationTime))
+      }
+      out.result()
+    }
+    // drain's commit is itself an image: move the head past it first
+    CommitLog.commit(fs, primary, 450L, Nil, Seq("data/store0"))
+    assert(CommitLog.ship(spark, primary, standby) == Seq(dv + 1))
+    val held = dataFiles(standby)
+    val logs = fs.listStatus(new Path(s"$standby/_log")).length
+    val img = CommitLog.saveNamespace(spark, primary, ts = 500L).get
+    assert(CommitLog.ship(spark, primary, standby) == Seq(img))
+    assert(dataFiles(standby) == held, "a metadata image must ship no data")
+    assert(fs.listStatus(new Path(s"$standby/_log")).length == logs + 1)
+    assert(footer(standby) == footer(primary))
+    def rows(dir: String) = CommitLog.snapshot(spark, dir).collect().map(_.toString).sorted.toSeq
+    assert(rows(standby) == rows(primary))
+  }
+
   test("journal replay equals a set-fold model over 30 random histories (burned files ignored)") {
     val rnd = new scala.util.Random(42)
     (0 until 30).foreach { trial =>

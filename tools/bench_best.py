@@ -143,16 +143,16 @@ def main():
     # sessions are not re-derivable from git history, so a fresh
     # invocation that only passes today's runs would silently RAISE
     # floors built from them (observed: 124.77 -> 130.85 s). For
-    # STALE_FLOORS queries, seed only floors whose recorded source was
-    # itself a fresh measurement ('worktree' or an explicit run file)
-    # — a git-hash-sourced seed would defeat the stale-floor purge.
+    # STALE_FLOORS queries are never seeded: a recorded source that
+    # looks fresh ('worktree', a run file) may have been folded BEFORE
+    # the query's rework and so measure the retired ceremony; their
+    # floors come only from the fresh tags folded below.
     try:
         cur = json.load(open("docs/bench_best.json"))
         for q, t in cur.get("queries", {}).items():
-            s = cur.get("source_run", {}).get(q, "")
-            if q in STALE_FLOORS and not (s == "worktree" or ".json" in s):
+            if q in STALE_FLOORS:
                 continue
-            best[q], src[q] = t, s or "seed"
+            best[q], src[q] = t, cur.get("source_run", {}).get(q, "") or "seed"
     except Exception:
         pass
     for tag, d in versions():
