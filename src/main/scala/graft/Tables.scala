@@ -15,13 +15,14 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   /** Session-scoped RELATION cache — the catalog role (VERDICT r8
-    * #1, fixed per-query overhead): `spark.read.parquet` builds a
-    * fresh file index per call, so without this every one of the
-    * ~183 registered queries re-lists the table dir and re-reads
-    * parquet footers for schema — exactly the file-open syscalls the
-    * build host's degraded windows amplify 5-15×. A real engine
-    * resolves tables through a catalog that holds the analyzed
-    * relation once; these source tables are immutable test fixtures,
+    * #1, fixed per-query overhead): a real engine resolves tables
+    * through a catalog that holds the analyzed relation once. A miss
+    * reads through `Lake.readParquet`, whose schema comes from one
+    * driver-side footer read with no job, so what a hit saves is the
+    * file index (the table dir's listing) and the analyzed plan, and
+    * above all the relation's IDENTITY: `sourceOf` maps a frame back
+    * to its table by reference, so derived-artifact layers key their
+    * layouts on it. These source tables are immutable test fixtures,
     * so caching the DataFrame (an immutable logical plan + file
     * index, NOT materialized data) is the honest equivalent. Keyed
     * per session so Verify/Bench/spec sessions never share state.
@@ -55,8 +56,7 @@ object Tables {
     * child is created/removed, so an in-place rewrite of a part file
     * (same name set) would serve the stale index — the child mtimes
     * catch that. One shallow listing per lookup is the price of a real
-    * catalog's version check, still ~1000x cheaper than the recursive
-    * listing + footer schema read the cache avoids. */
+    * catalog's version check. */
   private def sig(spark: SparkSession, path: String): String =
     try {
       val p = new org.apache.hadoop.fs.Path(path)
@@ -84,7 +84,7 @@ object Tables {
     val now = sig(spark, path)
     m.compute(s"$dir/$name", (_, cur) =>
       if (cur != null && cur.sig == now) cur
-      else CachedRel(now, spark.read.parquet(path))).df
+      else CachedRel(now, graft.operators.Lake.readParquet(spark, path))).df
   }
 
   /** Reverse catalog lookup: is `df` one of the cached TABLE
@@ -107,31 +107,14 @@ object Tables {
         .headOption
     }
 
-  /** Table ROW COUNT memoized per (dir, table, content signature) —
-    * the catalog's table-stats role (VERDICT r16 #3: the plane-ladder
-    * ops derived their bucket count from a count() job on EVERY
-    * invocation; a real engine reads N from table statistics). The
-    * signature check makes a regenerated table recount; the count
-    * itself is a parquet-footer metadata read, run once per content
-    * generation. Keyed on content — not session — because a row count
-    * is a pure fact about the files, and clearCache can't evict it.
-    * Only the LATEST signature per (dir, name) is kept (ADVICE r17:
-    * an append-only map leaks one entry per table regeneration in a
-    * long-lived JVM) — a superseded generation's count is dead the
-    * moment the files change, the famMemoized discipline. */
-  private val countCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, java.lang.Long)]()
-
-  def rowCount(spark: SparkSession, dir: String, name: String): Long = {
-    val table = s"$dir/$name"
-    val s = sig(spark, s"$dir/$name.parquet")
-    Option(countCache.get(table)).filter(_._1 == s).map(_._2.longValue())
-      .getOrElse {
-        val n = load(spark, dir, name).count()
-        countCache.put(table, (s, java.lang.Long.valueOf(n)))
-        n
-      }
-  }
+  /** Table ROW COUNT — the catalog's table-stats role (VERDICT r16
+    * #3: the plane-ladder ops derive a bucket count from N, which a
+    * real engine reads from table statistics): the sum of the part
+    * footers' record counts, read on the driver by `Lake.footerRows`
+    * with no job. That footer read is the whole cost, so nothing is
+    * memoized. */
+  def rowCount(spark: SparkSession, dir: String, name: String): Long =
+    graft.operators.Lake.footerRows(spark, Seq(s"$dir/$name.parquet"))
 
   def region(s: SparkSession, d: String): DataFrame = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = load(s, d, "nation")

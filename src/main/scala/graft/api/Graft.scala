@@ -205,7 +205,7 @@ object Graft {
           // concurrently live) session
           val frame = memoized(
             (System.identityHashCode(s), "sh_layout", path, sig),
-            s.read.parquet(path))
+            graft.operators.Lake.readParquet(s, path))
           frameSig.put(frame, (path, sig))
           frame
         case None =>
@@ -339,7 +339,7 @@ object Graft {
             candIds.write.mode("overwrite").parquet(path)
           }
           memoized((System.identityHashCode(s), "cand_ids", path, sig),
-            s.read.parquet(path))
+            graft.operators.Lake.readParquet(s, path))
         case None =>
           memoized(planKey(sh, "cand_ids", k, bands), candIds)
       }
@@ -936,9 +936,14 @@ object Graft {
 
   /** Lake maintenance over arbitrary frames/paths. */
   object lake {
-    /** Rewrite a dataset to a bounded file count (compaction). */
+    /** Rewrite a dataset to a bounded file count (compaction): a write
+      * of the result produces at most `targetPartitions` files. It
+      * bin-packs the input's partitions (`coalesce`), so it plans no
+      * exchange and moves no row through a shuffle; the rows are the
+      * input's. It only merges: an input with fewer partitions keeps
+      * its count, so compaction never raises the file count. */
     def compact(df: DataFrame, targetPartitions: Int): DataFrame =
-      df.repartition(targetPartitions)
+      df.coalesce(targetPartitions)
 
     /** Orphan count of child rows without a parent (fsck edge). */
     def orphans(child: DataFrame, parent: DataFrame,

@@ -379,7 +379,7 @@ object Analytics {
       Lake.provisionIfStale(fs, path, sig) {
         edgeBuild.write.mode("overwrite").parquet(path)
       }
-      s.read.parquet(path).repartition(4, col("src")).localCheckpoint()
+      Lake.readParquet(s, path).repartition(4, col("src")).localCheckpoint()
     }
     // node-proportional iterate frames get SIZE-SCALED partitioning
     // (one partition per ~10M rows, floor 1 — so locally this still

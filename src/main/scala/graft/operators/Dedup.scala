@@ -826,7 +826,7 @@ object Dedup {
       val shc = corpus.select(col("doc_id"),
         sort_array(Shingles.shingleHashes(col("text"))).as("sh"))
       shc.write.mode("overwrite").parquet(s"$root/shingles")
-      Graft.dedup.bandedKeys(s.read.parquet(s"$root/shingles"), K, Bands)
+      Graft.dedup.bandedKeys(Lake.readParquet(s, s"$root/shingles"), K, Bands)
         .select(col("band_idx"), col("band_key"), col("doc_id"))
         .write.mode("overwrite").parquet(s"$root/bands")
     }
@@ -838,8 +838,8 @@ object Dedup {
     //   when the query's action completes
     val bandsB = Graft.dedup.bandedKeys(shb, K, Bands)
       .select(col("band_idx"), col("band_key"), col("doc_id"))
-    val idxBands = s.read.parquet(s"$root/bands")
-    val idxSh = s.read.parquet(s"$root/shingles")
+    val idxBands = Lake.readParquet(s, s"$root/bands")
+    val idxSh = Lake.readParquet(s, s"$root/shingles")
     // Candidates dedup on BARE id pairs, shingles attach afterwards —
     // the candidateSetsFromShingles discipline: multi-band collisions
     // must not drag the heavy shingle arrays through the distinct's

@@ -866,7 +866,7 @@ object Durability {
     // content rows/checksums: ONE pruned read per entry, unioned into
     // a single distributed aggregate
     val content = active.map { rel =>
-      s.read.parquet(s"$dir/$rel")
+      Lake.readParquet(s, s"$dir/$rel")
         .select(GraftHash.charHash(col("text")).as("fp"))
         .agg(count(lit(1)).as("n_rows"), (sum(col("fp")) % GraftHash.P).as("checksum"))
         .select(lit(rel).as("entry"), col("n_rows"), col("checksum"))
@@ -881,7 +881,7 @@ object Durability {
     manifest.coalesce(1).write.mode("overwrite").parquet(exportDir)
     // the served artifact must stand on its own: read it BACK and
     // verify it round-trips before certifying
-    val served = s.read.parquet(exportDir)
+    val served = Lake.readParquet(s, exportDir)
     require(served.count() == active.size.toLong, "export manifest incomplete")
     served
       .select(col("entry"), col("n_rows"), col("checksum"),
@@ -958,7 +958,7 @@ object Durability {
     // excluded the entry from the physical read path
     corruptInPlace(fs, dir, "data/b1")
     graft.api.Graft.lake.groupChecksum(
-        s.read.parquet(ok.map(rel => s"$dir/$rel"): _*), "text", "lang")
+        Lake.readParquet(s, ok.map(rel => s"$dir/$rel"): _*), "text", "lang")
       .select(col("lang"), col("n_rows").as("n_docs"), col("checksum"),
         lit(1L).as("n_served_blocks"),
         lit((tokens.size - ok.size).toLong).as("n_refused_blocks"))
@@ -1249,7 +1249,7 @@ object Durability {
     // (groupChecksum with no group columns = global n_rows + checksum)
     val paths = finalPl.toSeq.flatMap { case (i, bs) => bs.map(b => s"${domDir(i)}/b$b") }
     val audit = graft.api.Graft.lake
-      .groupChecksum(s.read.parquet(paths: _*), "text")
+      .groupChecksum(Lake.readParquet(s, paths: _*), "text")
       .collect().head
     require(audit.getLong(0) == totalDocs, "balancer lost rows")
     import s.implicits._

@@ -49,7 +49,7 @@ object Insights {
     def readFiles(rel: Set[String]): DataFrame = {
       val paths = rel.toSeq.sorted.map(r => s"$dir/$r")
       if (paths.isEmpty) s.emptyDataFrame.select(lit(0L).as("o_totalprice"))
-      else s.read.parquet(paths: _*)
+      else Lake.readParquet(s, paths: _*)
     }
     def side(name: String, files: Set[String]): DataFrame =
       readFiles(files)

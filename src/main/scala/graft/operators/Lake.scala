@@ -123,6 +123,45 @@ object Lake {
     }.sum
   }
 
+  /** `spark.read.parquet(paths)` without its schema-inference job. When
+    * every path is a file or a flat directory (every visible entry a
+    * `.parquet` file, "visible" by Spark's file-index rule: `_`/`.`
+    * names and `._COPYING_` hide, summaries do not), the schema is
+    * resolved on the driver from the one footer Spark's inference
+    * would open — the first `_common_metadata`, else `_metadata`, else
+    * the first part file by path — decoded by `Shims.footerSchema`
+    * under this session's converter, so foreign footers type as they
+    * would under inference, and the read is planned with it.
+    * Partitioned or nested directories, other visible files,
+    * `mergeSchema`, missing paths (globs among them) and directories
+    * with no part file read through `spark.read.parquet`, which infers
+    * or raises as it always did. */
+  def readParquet(spark: SparkSession, paths: String*): DataFrame = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = FileSystem.get(conf)
+    val summaries = Seq("_common_metadata", "_metadata")
+    def hidden(n: String) = !summaries.contains(n) && (n.startsWith(".") ||
+      (n.startsWith("_") && !n.contains("=")) || n.endsWith("._COPYING_"))
+    // a root directory's own name hides nothing; a hidden-named root
+    // file is left to Spark
+    def leaves(p: Path): Option[Seq[FileStatus]] =
+      Some(p).filter(fs.exists).map(fs.getFileStatus).flatMap { st =>
+        if (st.isFile) Some(Seq(st)).filterNot(_ => hidden(p.getName))
+        else Some(fs.listStatus(p).toSeq.filterNot(k => hidden(k.getPath.getName)))
+          .filter(_.forall(k => summaries.contains(k.getPath.getName) ||
+            (k.isFile && k.getPath.getName.endsWith(".parquet"))))
+      }
+    val listed =
+      if (spark.conf.get("spark.sql.parquet.mergeSchema", "false").toBoolean) Seq(None)
+      else paths.map(p => leaves(new Path(p)))
+    val byPath =
+      if (listed.exists(_.isEmpty)) Nil else listed.flatten.flatten.sortBy(_.getPath.toString)
+    val footer = (summaries.map(n => byPath.find(_.getPath.getName == n)) :+
+      byPath.find(f => !summaries.contains(f.getPath.getName))).flatten.headOption
+    footer.flatMap(org.apache.spark.sql.graft.Shims.footerSchema(conf, _, Some(spark)))
+      .fold(spark.read.parquet(paths: _*))(spark.read.schema(_).parquet(paths: _*))
+  }
+
   private def sigFile(path: String) =
     new org.apache.hadoop.fs.Path(path, "_graft_src_sig")
 
@@ -280,9 +319,9 @@ object Lake {
     val compacted = scratch("compacted_events")
     val ev = Tables.events(s, d)
     ev.repartition(32).write.mode("overwrite").parquet(fragmented) // many small files
-    s.read.parquet(fragmented).repartition(4)
+    graft.api.Graft.lake.compact(readParquet(s, fragmented), 4)
       .write.mode("overwrite").parquet(compacted)                  // compacted
-    s.read.parquet(compacted)
+    readParquet(s, compacted)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"), sumM(col("value")).as("total"))
       .orderBy(col("event_type"))
@@ -445,7 +484,7 @@ object Lake {
     // semantics pinned in NamespaceContractSpec; TestDFSRename.java /
     // TestDFSShell.java contracts enforced above the backing store)
     val renamed = Namespace.renameStrict(fs, stage, fin)
-    val rowsAtFinal = s.read.parquet(fin.toString).count()
+    val rowsAtFinal = readParquet(s, fin.toString).count()
     val stageGone = !fs.exists(stage)
     val deleted = Namespace.deleteStrict(fs, fin, recursive = true)
     Seq(
@@ -471,7 +510,7 @@ object Lake {
     val docs = Tables.documents(s, d)
     docs.filter(col("doc_id") % 2 === 0).write.mode("overwrite").parquet(partA)
     docs.filter(col("doc_id") % 2 =!= 0).write.mode("overwrite").parquet(partB)
-    s.read.parquet(partA, partB)
+    readParquet(s, partA, partB)
       .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("total_chars"))
   }
 
@@ -517,10 +556,10 @@ object Lake {
     val v1 = scratch("retained_events_v1")
     val v2 = scratch("retained_events_v2")
     Tables.events(s, d).write.mode("overwrite").parquet(v1)
-    s.read.parquet(v1)
+    readParquet(s, v1)
       .filter(col("ts") >= lit("2024-01-20").cast("timestamp"))
       .write.mode("overwrite").parquet(v2)
-    s.read.parquet(v2)
+    readParquet(s, v2)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"), sumM(col("value")).as("total"))
       .orderBy(col("event_type"))
@@ -789,7 +828,7 @@ object Lake {
     Lake.concurrently(affected) { case (g, a, b) =>
       val surviving = if (a == 0) b else a
       val target = (1 until domains.size).filter(_ != surviving).head
-      s.read.parquet(s"${domains(surviving)}/lang=$g")
+      readParquet(s, s"${domains(surviving)}/lang=$g")
         .write.mode("overwrite").parquet(s"${domains(target)}/lang=$g")
     }
     // the repaired audit feeds BOTH the invariant assertions and the

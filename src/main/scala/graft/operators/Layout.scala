@@ -71,7 +71,7 @@ object Layout {
        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin
   ) { (s, d) =>
     val path = ensureZordered(s, d)
-    s.read.parquet(path)
+    Lake.readParquet(s, path)
       .filter(col("l_partkey").between(20, 79) && col("l_suppkey").between(2, 5))
       .groupBy(col("l_returnflag"))
       .agg(count(lit(1)).as("n"), sumM(col("l_extendedprice")).as("revenue"))
@@ -104,7 +104,7 @@ object Layout {
         .count(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
       if (nFiles > threshold) {
         val tmp = new org.apache.hadoop.fs.Path(st.getPath.getParent, s".compact_${st.getPath.getName}")
-        s.read.parquet(st.getPath.toString).coalesce(2)
+        graft.api.Graft.lake.compact(Lake.readParquet(s, st.getPath.toString), 2)
           .write.mode("overwrite").parquet(tmp.toString)
         fs.delete(st.getPath, true)
         fs.rename(tmp, st.getPath)
@@ -141,7 +141,7 @@ object Layout {
     * exactly the given files — the metadata a lakehouse extracts from
     * parquet footers as it writes them. */
   private def cowStats(s: SparkSession, files: Seq[String]): DataFrame =
-    s.read.parquet(files: _*)
+    Lake.readParquet(s, files: _*)
       .groupBy(input_file_name().as("file"))
       .agg(min("l_orderkey").as("kmin"), max("l_orderkey").as("kmax"))
 
@@ -191,7 +191,7 @@ object Layout {
     * asserting the delete still succeeds). Returns the touched files. */
   private[graft] def cowDelete(s: SparkSession, dir: String, lo: Long, hi: Long): Seq[String] = {
     val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-    val manifest = s.read.parquet(s"$dir/_manifest").collect()
+    val manifest = Lake.readParquet(s, s"$dir/_manifest").collect()
     val (touchedRows, keptRows) = manifest.partition(r =>
       r.getAs[Long]("kmax") >= lo && r.getAs[Long]("kmin") <= hi)
     val touched = touchedRows.map(_.getAs[String]("file")).toSeq
@@ -202,7 +202,7 @@ object Layout {
       // (ceremony job diet, VERDICT r8 #5); one file per rewrite
       // batch keeps the frame↔file stats mapping exact
       val remainder = graft.ScopedCache(
-        s.read.parquet(touched: _*)
+        Lake.readParquet(s, touched: _*)
           .filter(!col("l_orderkey").between(lo, hi)))
       val mm = remainder
         .agg(min("l_orderkey").as("kmin"), max("l_orderkey").as("kmax"))
@@ -257,7 +257,7 @@ object Layout {
   private[graft] def cowDeleteVersion(s: SparkSession, dir: String, deltaDir: String,
                                       lo: Long, hi: Long): (Seq[String], Seq[String]) = {
     val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-    val manifest = s.read.parquet(s"$dir/_manifest").collect()
+    val manifest = Lake.readParquet(s, s"$dir/_manifest").collect()
     val (touchedRows, keptRows) = manifest.partition(r =>
       r.getAs[Long]("kmax") >= lo && r.getAs[Long]("kmin") <= hi)
     val touched = touchedRows.map(_.getAs[String]("file")).toSeq
@@ -266,7 +266,7 @@ object Layout {
       if (touched.isEmpty) Seq.empty
       else {
         val remainder = graft.ScopedCache(
-          s.read.parquet(touched: _*)
+          Lake.readParquet(s, touched: _*)
             .filter(!col("l_orderkey").between(lo, hi)))
         val mm = remainder
           .agg(min("l_orderkey").as("kmin"), max("l_orderkey").as("kmax"))
@@ -320,7 +320,7 @@ object Layout {
       if (files.isEmpty)
         s.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
           Tables.lineitem(s, d).schema)
-      else s.read.parquet(files: _*)
+      else Lake.readParquet(s, files: _*)
     v1.groupBy(col("l_returnflag"))
       .agg(count(lit(1)).as("n"), sumM(col("l_quantity")).as("total_qty"))
       .orderBy(col("l_returnflag"))
@@ -388,7 +388,7 @@ object Layout {
         .repartitionByRange(16, col("l_orderkey"))
         .sortWithinPartitions(col("l_orderkey"))
         .write.mode("overwrite").parquet(s"$path/table")
-      s.read.parquet(s"$path/table")
+      Lake.readParquet(s, s"$path/table")
         .groupBy(input_file_name().as("file"))
         .agg(min("l_orderkey").as("kmin"), max("l_orderkey").as("kmax"))
         .coalesce(1)
@@ -415,7 +415,7 @@ object Layout {
     val path = ensurePointLayout(s, d)
     val key = 777L
     val files = candidateFiles(s, path, key)
-    s.read.parquet(files: _*)
+    Lake.readParquet(s, files: _*)
       .filter(col("l_orderkey") === key)
       .select(col("l_orderkey"), col("l_linenumber").cast("long").as("line_no"),
         col("l_quantity"), col("l_returnflag"))
@@ -425,7 +425,7 @@ object Layout {
   /** Manifest consultation: the files whose [kmin, kmax] contains the
     * key (driver-side — the manifest is metadata, not data). */
   private[graft] def candidateFiles(s: SparkSession, path: String, key: Long): Seq[String] =
-    s.read.parquet(s"$path/manifest")
+    Lake.readParquet(s, s"$path/manifest")
       .filter(col("kmin") <= key && col("kmax") >= key)
       .collect().map(_.getAs[String]("file")).toSeq
 

@@ -897,7 +897,7 @@ object Namespace {
     // image entry — the OIV cost model (namespace-proportional, zero
     // data I/O)
     val counts = image.sorted.map(rel =>
-      rel -> s.read.parquet(s"$dir/$rel").count())
+      rel -> Lake.readParquet(s, s"$dir/$rel").count())
     val tot = counts.map(_._2).sum
     import s.implicits._
     counts.map { case (rel, nr) => (nr * 16 / tot, rel, nr) }
@@ -955,7 +955,7 @@ object Namespace {
       docs.filter(col("doc_id") % 4 === i).coalesce(1)
         .write.mode("overwrite").parquet(s"$dir/_stage/s$i")
     }
-    def landedRows(rel: String): Long = s.read.parquet(s"$dir/$rel").count()
+    def landedRows(rel: String): Long = Lake.readParquet(s, s"$dir/$rel").count()
     val log = scala.collection.mutable.ArrayBuffer.empty[(Long, String, Boolean, Long)]
     def audit(seq: Long, cmd: String, allowed: Boolean, n: Long = 0L): Unit =
       log += ((seq, cmd, allowed, n))
@@ -1057,7 +1057,7 @@ object Namespace {
     }
     val data = p(s"$root/data")
     val sliceRows = (0 until 5)
-      .map(i => s.read.parquet(s"$root/_stage/s$i").count())
+      .map(i => Lake.readParquet(s, s"$root/_stage/s$i").count())
     val log = scala.collection.mutable.ArrayBuffer.empty[(Long, String, Boolean, Long, Long)]
     def usage(): (Long, Long) = quotaUsage(s, data)
     def step(seq: Long, cmd: String, allowed: Boolean): Unit = {

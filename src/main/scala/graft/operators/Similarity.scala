@@ -450,7 +450,7 @@ object Similarity {
         .select(col("vec_id"), col("m"), col("cid"))
         .write.mode("overwrite").parquet(path)
     }
-    val codes = famMemoized(s, d, "pq_codes", srcSig)(s.read.parquet(path))
+    val codes = famMemoized(s, d, "pq_codes", srcSig)(Lake.readParquet(s, path))
     val qd = subDists(n.filter(col("vec_id") < QueryCount))
       .select(col("vec_id").as("query_id"), col("m").as("qm"),
         col("cid").as("qcid"), col("dist").as("qdist"))
@@ -1365,7 +1365,7 @@ object Similarity {
     Lake.provisionIfStale(fs, path, sig) {
       knnDirected(s, d)._2.write.mode("overwrite").parquet(path)
     }
-    famMemoized(s, d, "knn_dir", sig)(s.read.parquet(path))
+    famMemoized(s, d, "knn_dir", sig)(Lake.readParquet(s, path))
   }
 
   /** Mutual (reciprocal) edge set of the k-NN graph — shared by the
@@ -1396,7 +1396,7 @@ object Similarity {
         .select(col("a"), col("b"), col("cid"), col("n_dir"), col("mcos"))
         .write.mode("overwrite").parquet(path)
     }
-    famMemoized(s, d, "knn_mutual", sig)(s.read.parquet(path))
+    famMemoized(s, d, "knn_mutual", sig)(Lake.readParquet(s, path))
   }
 
   /** Shared per-round lineage cut for the iterating graph ops

@@ -22,11 +22,13 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *
   * Each log file is a tiny text journal: `ts <millis>` then one
   * `add <relpath>` / `remove <relpath>` per line, closed by `end`. A
-  * commit whose data it wrote itself (`writeCommit`, a data image)
-  * also records `schema <json>`: the Spark row schema of that
-  * data, taken on the driver from the footer of one part file it just
-  * wrote, decoded as Spark's own inference decodes it (in the nullable
-  * form every parquet read gives its columns). Readers ignore
+  * commit of local parquet (`commit`, and through it `writeCommit`,
+  * compactions and promoted flushes; a data image, `restore`, `drain`)
+  * also records `schema <json>`: the Spark row schema its adds hold,
+  * taken on the driver from the footer of each add's first part file,
+  * decoded as Spark's own inference decodes it (in the nullable form
+  * every parquet read gives its columns), and recorded only when all
+  * adds carry the same one under Spark's key. Readers ignore
   * lines they do not know, so journals with and without it stay
   * readable both ways. A version commits by
   * CREATING its log file exclusively (`FileSystem.create(path,
@@ -64,9 +66,10 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * through one reader (`read`): when EVERY entry it reads carries the
   * same recorded schema, that schema is handed to Spark and resolving
   * the snapshot schedules no job (a NameNode never opens a block to
-  * learn its shape); otherwise — legacy journals, adds committed
-  * through `commit()` (clones, restores, external compactions),
-  * mixed schemas — Spark infers the schema from a footer, as it
+  * learn its shape); otherwise — legacy journals, shallow clones'
+  * external references, foreign parquet, mixed schemas, entries
+  * written by `tryCommit` without one — Spark infers the schema from
+  * a footer, as it
   * would for any parquet read. Both give the same schema: when all
   * footers agree, inference over any of them returns the recorded one.
   * At 100 TB the
@@ -277,12 +280,14 @@ object CommitLog {
     true
   }
 
-  /** Commit at the next available version, retrying under contention.
+  /** Commit at the next available version, retrying under contention,
+    * recording the schema the adds' footers carry (`addsSchema`).
     * Returns the version written. */
   def commit(fs: FileSystem, tableDir: String, ts: Long,
              adds: Seq[String], removes: Seq[String],
              checkpointMarker: Boolean = false,
-             tags: Seq[String] = Nil, schema: Option[String] = None): Int = {
+             tags: Seq[String] = Nil): Int = {
+    val schema = addsSchema(fs, tableDir, adds)
     var v = maxVersionOnDisk(fs, tableDir).map(_ + 1).getOrElse(0)
     while (!tryCommit(fs, tableDir, v, ts, adds, removes, checkpointMarker, tags, schema)) v += 1
     v
@@ -457,24 +462,36 @@ object CommitLog {
       throw new java.io.IOException(
         s"$tableDir is frozen (safe mode): write refused before any data I/O")
     df.write.mode("overwrite").parquet(s"$tableDir/$relPath")
-    commit(fs, tableDir, ts, adds = Seq(relPath), removes = Seq.empty,
-      schema = writtenSchema(spark, fs, s"$tableDir/$relPath"))
+    commit(fs, tableDir, ts, adds = Seq(relPath), removes = Seq.empty)
   }
 
-  /** The schema (JSON) a read of the parquet just written under `dir`
-    * resolves to, from the footer of its first part file; None when
-    * there is no part file or its footer lacks Spark's schema key (the
-    * entry then resolves by inference). */
-  private def writtenSchema(spark: SparkSession, fs: FileSystem, dir: String): Option[String] =
-    Lake.dataFiles(fs, new Path(dir)).headOption
-      .flatMap(org.apache.spark.sql.graft.Shims.sparkFooterSchema(spark, _)).map(_.json)
+  /** The schema (JSON) a read of `adds` resolves to, for a commit to
+    * record: the Spark-keyed row schema in the first part-file footer
+    * of each add (`Shims.footerSchema`, no session needed), when every
+    * add is a LOCAL file or flat directory and all carry the same one.
+    * Otherwise nothing is recorded and the read infers as before:
+    * clone references, partitioned entries (their reads add columns no
+    * footer holds), foreign footers, mixed schemas, and a missing or
+    * unreadable add — recording never fails a commit. */
+  private def addsSchema(fs: FileSystem, tableDir: String, adds: Seq[String]): Option[String] =
+    if (adds.isEmpty || adds.exists(_.startsWith("/"))) None
+    else scala.util.Try(adds.map { a =>
+      val entry = fs.makeQualified(new Path(tableDir, a))
+      val parts = Lake.dataFiles(fs, entry).sortBy(_.getPath.toString)
+      if (parts.exists(f => f.getPath != entry && f.getPath.getParent != entry)) None
+      else parts.headOption.flatMap(org.apache.spark.sql.graft.Shims.footerSchema(fs.getConf, _))
+        .map(_.json)
+    }.distinct).toOption match {
+      case Some(Seq(uniform)) => uniform
+      case _ => None
+    }
 
   /** The one read path of the commit log: a parquet read of the given
     * active entries (relpath, recorded schema). The recorded schema is
     * handed to Spark only when EVERY entry carries the same one — then
     * no schema-inference job runs; any entry without one (legacy
-    * journal, adds made through `commit()`, foreign parquet) or a mix
-    * of schemas leaves the read to Spark's inference. */
+    * journal, clone references, foreign parquet) or a mix of schemas
+    * leaves the read to Spark's inference. */
   private def read(spark: SparkSession, tableDir: String,
                    entries: Seq[(String, Option[String])]): DataFrame = {
     val paths = entries.map { case (p, _) => resolve(tableDir, p) }
@@ -653,7 +670,7 @@ object CommitLog {
     val (adds, removes, schema) =
       if (materialize) {
         read(spark, tableDir, entries).write.mode("overwrite").parquet(s"$tableDir/$image")
-        (Seq(image), active, writtenSchema(spark, fs, s"$tableDir/$image"))
+        (Seq(image), active, addsSchema(fs, tableDir, Seq(image)))
       } else (active, Nil, entries.map(_._2).distinct match {
         case Seq(uniform) => uniform
         case _ => None
@@ -1047,7 +1064,8 @@ object CommitLog {
     val current = activeSet(cs)
     val adds = target.filterNot(current.toSet)
     val removes = current.filterNot(target.toSet)
-    if (!tryCommit(fs, tableDir, next, ts, adds, removes, tags = Seq("restore")))
+    if (!tryCommit(fs, tableDir, next, ts, adds, removes, tags = Seq("restore"),
+        schema = addsSchema(fs, tableDir, adds)))
       throw new java.util.ConcurrentModificationException(
         s"$tableDir advanced past version $next during restore — retry")
     next
@@ -1083,7 +1101,8 @@ object CommitLog {
     read(spark, tableDir, entries.filter { case (p, _) => isDoomed(p) })
       .write.mode("overwrite").parquet(s"$tableDir/$destRelPath")
     if (!tryCommit(fs, tableDir, next, ts, adds = survivors :+ destRelPath,
-        removes = doomed, checkpointMarker = true, tags = Seq("drain"))) {
+        removes = doomed, checkpointMarker = true, tags = Seq("drain"),
+        schema = addsSchema(fs, tableDir, survivors :+ destRelPath))) {
       fs.delete(new Path(tableDir, destRelPath), true)
       throw new java.util.ConcurrentModificationException(
         s"$tableDir advanced past version $next during drain — retry")

@@ -733,7 +733,8 @@ object StreamingOps {
             col("value").as("last_value"), col("event_id").as("last_event"), col("ts")))
           val dirP = new org.apache.hadoop.fs.Path(stateDir)
           val merged =
-            if (fs.exists(dirP)) keepLatest(spark.read.parquet(stateDir).unionByName(fresh))
+            if (fs.exists(dirP))
+              keepLatest(graft.operators.Lake.readParquet(spark, stateDir).unionByName(fresh))
             else fresh
           // the merge above may outlive the TTL: re-assert ownership at
           // the last moment before the swap

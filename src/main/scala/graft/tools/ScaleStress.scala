@@ -183,21 +183,21 @@ object ScaleStress {
 
     // dims: fixed universe
     Seq("region", "nation", "customer", "supplier", "part")
-      .foreach(t => write(spark.read.parquet(s"$base/$t.parquet"), t))
+      .foreach(t => write(graft.operators.Lake.readParquet(spark, s"$base/$t.parquet"), t))
 
     // orders + lineitem: one shared orderkey offset per copy
-    val orders = spark.read.parquet(s"$base/orders.parquet")
+    val orders = graft.operators.Lake.readParquet(spark, s"$base/orders.parquet")
     val offO = keyOffset(orders, "o_orderkey")
     write(copies(orders)((d, i) =>
       d.withColumn("o_orderkey", col("o_orderkey") + lit(i * offO))), "orders")
-    val lineitem = spark.read.parquet(s"$base/lineitem.parquet")
+    val lineitem = graft.operators.Lake.readParquet(spark, s"$base/lineitem.parquet")
     write(copies(lineitem)((d, i) =>
       d.withColumn("l_orderkey", col("l_orderkey") + lit(i * offO))), "lineitem")
 
     // events: raw nanos-long ts so the scaled parquet reads through
     // the same Tables.events path as the originals
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val events = spark.read.parquet(s"$base/events.parquet")
+    val events = graft.operators.Lake.readParquet(spark, s"$base/events.parquet")
     val offE = keyOffset(events, "event_id")
     write(copies(events)((d, i) =>
       d.withColumn("event_id", col("event_id") + lit(i * offE))), "events")
@@ -214,7 +214,7 @@ object ScaleStress {
     // pair — the DEDUP_DENSITY_r11 probe measured 465x prefix / 1273x
     // banded candidate growth at 10x data from that artifact, which is
     // what made the dedup trio look superlinear in SCALE_r10.
-    val docs = spark.read.parquet(s"$base/documents.parquet")
+    val docs = graft.operators.Lake.readParquet(spark, s"$base/documents.parquet")
     val offD = keyOffset(docs, "doc_id")
     write(copies(docs)((d, i) =>
       if (i == 0) d
@@ -227,7 +227,7 @@ object ScaleStress {
 
     // embeddings: small per-copy component shift keeps copies out of
     // each other's LSH/IVF buckets; element type preserved
-    val emb = spark.read.parquet(s"$base/embeddings.parquet")
+    val emb = graft.operators.Lake.readParquet(spark, s"$base/embeddings.parquet")
     val offV = keyOffset(emb, "vec_id")
     write(copies(emb)((d, i) =>
       if (i == 0) d

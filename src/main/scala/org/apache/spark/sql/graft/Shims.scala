@@ -22,26 +22,30 @@ object Shims {
       .sessionState.functionRegistry
       .createOrReplaceTempFunction(name, builder, "built-in")
 
-  /** The schema a parquet read of part file `f` resolves to: what
-    * Spark's inference reads from its footer
-    * (`ParquetFileFormat.readSchemaFromFooter`, under the session's
-    * converter settings), made nullable as every file-source relation
+  /** The schema a parquet read whose inference opens the footer of `f`
+    * resolves to: `ParquetFileFormat.readSchemaFromFooter`, as Spark's
+    * inference decodes it, made nullable as every file-source relation
     * makes its data schema — so writes that differ only in nullability
-    * agree. None when the footer carries no Spark row-schema key:
-    * foreign parquet is typed by the reading session's converter, so
-    * only inference at read time can type it. One footer open on the
-    * driver, no job. */
-  def sparkFooterSchema(spark: org.apache.spark.sql.SparkSession,
-                        f: org.apache.hadoop.fs.FileStatus): Option[org.apache.spark.sql.types.StructType] = {
+    * agree. A footer with Spark's row-schema key decodes to that schema
+    * whatever the session. A foreign footer (pyarrow, DuckDB) is typed
+    * by the reading session's converter settings: decoded under
+    * `session`'s, and None without one. One footer open on the driver,
+    * no job. */
+  def footerSchema(conf: org.apache.hadoop.conf.Configuration,
+                   f: org.apache.hadoop.fs.FileStatus,
+                   session: Option[org.apache.spark.sql.SparkSession] = None)
+      : Option[org.apache.spark.sql.types.StructType] = {
     import org.apache.spark.sql.execution.datasources.parquet._
     val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, spark.sparkContext.hadoopConfiguration))
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf))
     val meta = try rd.getFooter finally rd.close()
-    if (!meta.getFileMetaData.getKeyValueMetaData.containsKey(ParquetReadSupport.SPARK_METADATA_KEY)) None
+    val keyed = meta.getFileMetaData.getKeyValueMetaData
+      .containsKey(ParquetReadSupport.SPARK_METADATA_KEY)
+    if (!keyed && session.isEmpty) None
     else Some(ParquetFileFormat.readSchemaFromFooter(
       new org.apache.parquet.hadoop.Footer(f.getPath, meta),
-      new ParquetToSparkSchemaConverter(
-        spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.conf))
+      new ParquetToSparkSchemaConverter(session.fold(new org.apache.spark.sql.internal.SQLConf)(
+        _.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.conf)))
       .asNullable)
   }
 }

@@ -2,7 +2,7 @@ package graft
 
 import graft.sources.CommitLog
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.SpecBus.jobsDuring
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DataType
@@ -697,23 +697,6 @@ class CommitLogSpec extends SparkSpec {
 
   // ---- recorded schema: job-free snapshot resolution ----------------
 
-  /** Jobs Spark starts while `f` runs (before any action on what it
-    * returns). */
-  private def jobsDuring[T](f: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    org.apache.spark.SpecBus.drain(sc)
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = { n.incrementAndGet(); () }
-    }
-    sc.addSparkListener(l)
-    try {
-      val r = f
-      org.apache.spark.SpecBus.drain(sc)
-      (r, n.get)
-    } finally sc.removeSparkListener(l)
-  }
-
   /** What a plain parquet read of the active entries returns: the
     * reference every commit-log read must equal. */
   private def inferred(dir: String, version: Int = Int.MaxValue) =
@@ -741,9 +724,9 @@ class CommitLogSpec extends SparkSpec {
     CommitLog.writeCommit(spark, dir, typed(0, 20), "data/a", ts = 100L)
     CommitLog.writeCommit(spark, dir, typed(20, 50), "data/b", ts = 200L)
     assert(CommitLog.commits(fs, dir).forall(_.schema.isDefined))
-    val (head, j0) = jobsDuring(CommitLog.snapshot(spark, dir))
-    val (v0, j1) = jobsDuring(CommitLog.snapshot(spark, dir, version = 0))
-    val (asOf, j2) = jobsDuring(CommitLog.snapshotAsOf(spark, dir, 150L))
+    val (head, j0) = jobsDuring(spark)(CommitLog.snapshot(spark, dir))
+    val (v0, j1) = jobsDuring(spark)(CommitLog.snapshot(spark, dir, version = 0))
+    val (asOf, j2) = jobsDuring(spark)(CommitLog.snapshotAsOf(spark, dir, 150L))
     assert((j0, j1, j2) == ((0, 0, 0)), s"resolve jobs: head $j0, v0 $j1, asOf $j2")
     sameRead(head, inferred(dir))
     sameRead(v0, inferred(dir, 0))
@@ -752,9 +735,10 @@ class CommitLogSpec extends SparkSpec {
     // job is the only one; an inferred read of the same set adds one
     val legacy = freshTable("schema_nojob_legacy")
     typed(0, 50).write.parquet(s"$legacy/data/a")
-    CommitLog.commit(fs, legacy, 100L, Seq("data/a"), Nil)
-    val (_, jLegacy) = jobsDuring(CommitLog.checkpoint(spark, legacy, ts = 300L))
-    val (_, jCkpt) = jobsDuring(CommitLog.checkpoint(spark, dir, ts = 300L))
+    // tryCommit records exactly what it is given: no schema
+    assert(CommitLog.tryCommit(fs, legacy, 0, 100L, Seq("data/a"), Nil))
+    val (_, jLegacy) = jobsDuring(spark)(CommitLog.checkpoint(spark, legacy, ts = 300L))
+    val (_, jCkpt) = jobsDuring(spark)(CommitLog.checkpoint(spark, dir, ts = 300L))
     assert(jCkpt == 1 && jLegacy == 2, s"checkpoint jobs: recorded $jCkpt, inferred $jLegacy")
   }
 
@@ -769,7 +753,7 @@ class CommitLogSpec extends SparkSpec {
     assert(DataType.fromJson(img.schema.get) == before.schema,
       "the image records the schema its read resolved")
     CommitLog.writeCommit(spark, dir, typed(50, 60), "data/c", ts = 400L)
-    val (head, jobs) = jobsDuring(CommitLog.snapshot(spark, dir))
+    val (head, jobs) = jobsDuring(spark)(CommitLog.snapshot(spark, dir))
     assert(jobs == 0)
     sameRead(head, inferred(dir))
     assert(head.count() == 60)
@@ -787,12 +771,12 @@ class CommitLogSpec extends SparkSpec {
         try out.write(body.getBytes("UTF-8")) finally out.close()
     }
     assert(CommitLog.commits(fs, dir).forall(_.schema.isEmpty))
-    val (head, jobs) = jobsDuring(CommitLog.snapshot(spark, dir))
+    val (head, jobs) = jobsDuring(spark)(CommitLog.snapshot(spark, dir))
     assert(jobs >= 1, "no recorded schema: Spark infers it")
     sameRead(head, inferred(dir))
     // a recorded entry beside an unrecorded one still infers
     CommitLog.writeCommit(spark, dir, typed(50, 60), "data/c", ts = 300L)
-    val (mixed, j2) = jobsDuring(CommitLog.snapshot(spark, dir))
+    val (mixed, j2) = jobsDuring(spark)(CommitLog.snapshot(spark, dir))
     assert(j2 >= 1)
     sameRead(mixed, inferred(dir))
   }
@@ -803,12 +787,12 @@ class CommitLogSpec extends SparkSpec {
     CommitLog.writeCommit(spark, dir, typed(20, 50).drop("m"), "data/b", ts = 200L)
     val cs = CommitLog.commits(fs, dir)
     assert(cs.map(_.schema).distinct.size == 2)
-    val (head, jobs) = jobsDuring(CommitLog.snapshot(spark, dir))
+    val (head, jobs) = jobsDuring(spark)(CommitLog.snapshot(spark, dir))
     assert(jobs >= 1)
     sameRead(head, inferred(dir))
     // one schema again once the odd entry is removed
     CommitLog.commit(fs, dir, 300L, Nil, Seq("data/b"))
-    val (v2, j2) = jobsDuring(CommitLog.snapshot(spark, dir))
+    val (v2, j2) = jobsDuring(spark)(CommitLog.snapshot(spark, dir))
     assert(j2 == 0)
     sameRead(v2, inferred(dir))
   }
@@ -828,18 +812,74 @@ class CommitLogSpec extends SparkSpec {
       w.write(groups.newGroup().append("id", i.toLong).append("name", s"n$i"))
     } finally w.close()
     val st = fs.getFileStatus(part)
-    assert(org.apache.spark.sql.graft.Shims.sparkFooterSchema(spark, st).isEmpty)
+    val conf = spark.sparkContext.hadoopConfiguration
+    assert(org.apache.spark.sql.graft.Shims.footerSchema(conf, st).isEmpty)
     // the decoder agrees with inference on Spark-written parquet
     val spk = freshTable("schema_foreign_spark")
     typed(0, 5).write.parquet(spk)
     val sparkPart = graft.operators.Lake.dataFiles(fs, new Path(spk)).head
-    assert(org.apache.spark.sql.graft.Shims.sparkFooterSchema(spark, sparkPart) ==
+    assert(org.apache.spark.sql.graft.Shims.footerSchema(conf, sparkPart) ==
       Some(spark.read.parquet(spk).schema))
     CommitLog.commit(fs, dir, 100L, Seq("data/f"), Nil)
-    val (head, jobs) = jobsDuring(CommitLog.snapshot(spark, dir))
+    val (head, jobs) = jobsDuring(spark)(CommitLog.snapshot(spark, dir))
     assert(jobs >= 1)
     sameRead(head, inferred(dir))
     assert(head.count() == 10)
+  }
+
+  test("writeCommit of a Tables.load frame runs one job: the write") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    // a foreign single-file batch, as pyarrow writes one
+    val in = freshTable("load_batches")
+    val msg = MessageTypeParser.parseMessageType(
+      "message t { required int64 id; optional binary name (UTF8); }")
+    val w = ExampleParquetWriter.builder(new Path(s"$in/b0000.parquet")).withType(msg)
+      .withConf(spark.sparkContext.hadoopConfiguration).build()
+    val groups = new SimpleGroupFactory(msg)
+    try (0 until 10).foreach { i =>
+      w.write(groups.newGroup().append("id", i.toLong).append("name", s"n$i"))
+    } finally w.close()
+    val dir = freshTable("load_commit")
+    val (v, jobs) = jobsDuring(spark)(
+      CommitLog.writeCommit(spark, dir, Tables.load(spark, in, "b0000"), "data/b0", ts = 100L))
+    assert(v == 0 && jobs == 1, s"writeCommit of a loaded batch ran $jobs jobs")
+    assert(CommitLog.commits(fs, dir).head.schema.isDefined)
+    sameRead(CommitLog.snapshot(spark, dir), spark.read.parquet(s"$in/b0000.parquet"))
+  }
+
+  test("commit() records the adds' schema: compaction, restore and drain snapshots are job-free") {
+    val dir = freshTable("commit_schema")
+    CommitLog.writeCommit(spark, dir, typed(0, 20), "data/store0/a", ts = 100L)
+    CommitLog.writeCommit(spark, dir, typed(20, 30), "data/store1/b", ts = 200L)
+    CommitLog.writeCommit(spark, dir, typed(30, 50), "data/store1/c", ts = 300L)
+    // compaction through commit(): rewrite the head, swap the files
+    val active = CommitLog.activeFiles(fs, dir)
+    graft.api.Graft.lake.compact(CommitLog.snapshot(spark, dir), 2)
+      .write.mode("overwrite").parquet(s"$dir/data/compact")
+    val vc = CommitLog.commit(fs, dir, 400L, Seq("data/compact"), active)
+    assert(CommitLog.commits(fs, dir).last.schema == CommitLog.commits(fs, dir).head.schema)
+    val (head, jobs) = jobsDuring(spark)(CommitLog.snapshot(spark, dir))
+    assert(jobs == 0, s"snapshot after compaction scheduled $jobs jobs")
+    sameRead(head, inferred(dir))
+    assert(head.count() == 50)
+    // restore re-adds the pre-compaction entries with their schema
+    val vr = CommitLog.restore(fs, dir, vc - 1, ts = 500L)
+    assert(CommitLog.commits(fs, dir).last.schema.isDefined)
+    val (restored, jr) = jobsDuring(spark)(CommitLog.snapshot(spark, dir))
+    assert(jr == 0)
+    sameRead(restored, inferred(dir))
+    // drain a prefix into one dir: survivors and the new dir agree
+    val (vd, _) = CommitLog.drain(spark, dir, "data/store1", "data/absorbed", ts = 600L)
+    assert(vd == vr + 1 && CommitLog.commits(fs, dir).last.schema.isDefined)
+    val (drained, jd) = jobsDuring(spark)(CommitLog.snapshot(spark, dir))
+    assert(jd == 0)
+    sameRead(drained, inferred(dir))
+    assert(drained.count() == 50)
+    // a missing add records nothing, and the commit still lands
+    val vm = CommitLog.commit(fs, dir, 700L, Seq("data/missing"), Nil)
+    assert(CommitLog.commits(fs, dir).find(_.version == vm).get.schema.isEmpty)
   }
 
   test("safe mode verifies an entry of nested partition dirs, refuses a foreign file") {
@@ -877,7 +917,7 @@ class CommitLogSpec extends SparkSpec {
     val active = CommitLog.activeFiles(fs, dir)
     assert(active == Seq("data/a", "data/c", "data/b"))
     val before = dataPaths(dir)
-    val (v, jobs) = jobsDuring(CommitLog.maybeCheckpoint(spark, dir, ts = 600L, maxReplay = 3))
+    val (v, jobs) = jobsDuring(spark)(CommitLog.maybeCheckpoint(spark, dir, ts = 600L, maxReplay = 3))
     assert(v.contains(5) && jobs == 0, s"cadence image $v scheduled $jobs jobs")
     val img = CommitLog.commits(fs, dir).last
     assert(img.isCheckpoint && img.adds == active && img.removes.isEmpty && img.tags.isEmpty)
@@ -888,7 +928,7 @@ class CommitLogSpec extends SparkSpec {
     // mixed schemas: the saveNamespace image records none
     CommitLog.writeCommit(spark, dir, typed(60, 70).drop("m"), "data/d", ts = 700L)
     val before2 = dataPaths(dir)
-    val (v2, jobs2) = jobsDuring(CommitLog.saveNamespace(spark, dir, ts = 800L))
+    val (v2, jobs2) = jobsDuring(spark)(CommitLog.saveNamespace(spark, dir, ts = 800L))
     assert(v2.contains(7) && jobs2 == 0, s"saveNamespace image $v2 scheduled $jobs2 jobs")
     val img2 = CommitLog.commits(fs, dir).last
     assert(img2.isCheckpoint && img2.adds == active :+ "data/d" && img2.removes.isEmpty)

@@ -85,6 +85,37 @@ class GraftApiSpec extends SparkSpec {
     assert(summary.getAs[Long]("n_rows") == 5)
   }
 
+  test("lake.compact writes at most n files without an exchange, same rows, one job") {
+    import org.apache.hadoop.fs.{FileSystem, Path}
+    import org.apache.spark.sql.execution.exchange.Exchange
+    val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    val frag = graft.operators.Lake.scratch("compact_api/frag")
+    val out = graft.operators.Lake.scratch("compact_api/out")
+    fs.delete(new Path(graft.operators.Lake.scratch("compact_api")), true)
+    Tables.events(spark, sfDir).repartition(12).write.parquet(frag)
+    def parts(dir: String) =
+      fs.listStatus(new Path(dir)).count(_.getPath.getName.endsWith(".parquet"))
+    def sums(df: org.apache.spark.sql.DataFrame) =
+      Graft.lake.groupChecksum(df, "props", "event_type").collect().map(_.toString).sorted.toSeq
+    val in = graft.operators.Lake.readParquet(spark, frag)
+    val compacted = Graft.lake.compact(in, 3)
+    val plan = compacted.queryExecution.executedPlan
+    assert(plan.collectFirst { case e: Exchange => e }.isEmpty && !plan.toString.contains("Exchange"),
+      s"compaction planned an exchange:\n$plan")
+    val (_, jobs) = org.apache.spark.SpecBus.jobsDuring(spark) {
+      Graft.lake.compact(graft.operators.Lake.readParquet(spark, frag), 3)
+        .write.mode("overwrite").parquet(out)
+    }
+    assert(jobs == 1, s"compact plus its write ran $jobs jobs")
+    val back = spark.read.parquet(out)
+    assert(parts(frag) == 12 && parts(out) <= 3, s"${parts(out)} files")
+    assert(back.count() == in.count() && sums(back) == sums(in))
+    // it only merges: asking for more files than the input holds
+    val wider = graft.operators.Lake.scratch("compact_api/wider")
+    Graft.lake.compact(back, 8).write.parquet(wider)
+    assert(parts(wider) <= parts(out) && sums(spark.read.parquet(wider)) == sums(in))
+  }
+
   test("dupClusters converges in O(log n) rounds on a 10k-node adversarial chain") {
     // a single chain 0-1-2-...-9999 is the worst case for plain label
     // propagation (O(n) rounds); pointer jumping must crush it.
