@@ -1,6 +1,7 @@
 package graft.api
 
 import graft.functions.{GraftHash, Parity, Shingles, Vectors}
+import graft.operators.Lake
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -114,56 +115,20 @@ object Graft {
           countDistinct(col(textCol)).as("n_unique"),
           (count(lit(1)) - countDistinct(col(textCol))).as("dup_rows"))
 
-    // ------------------------------------------------------------------
-    // Structural pipeline reuse. The shingle frame, the LSH candidate
+    // Structural pipeline reuse: the shingle frame, the LSH candidate
     // frame and the connected-components labels are each materialized
-    // ONCE per (session, input plan, params) and handed to every entry
-    // point that needs them — an explicit persist handle, not a bet on
-    // CacheManager plan-matching surviving memory pressure. Keys are
-    // canonicalized logical plans, so two reads of the same table at
-    // the same path share; the map is bounded and entries re-persist
-    // themselves if an external clearCache() dropped their blocks.
-    // ------------------------------------------------------------------
-    private final case class MemoEntry(df: DataFrame, seq: Long)
-    private val memo = new java.util.concurrent.ConcurrentHashMap[AnyRef, MemoEntry]()
-    private val memoSeq = new java.util.concurrent.atomic.AtomicLong()
+    // ONCE per (session, input plan, params) in `SessionMemo` and handed
+    // to every entry point that needs them — an explicit persist
+    // handle, not a bet on CacheManager plan-matching surviving memory
+    // pressure. Scopes are canonicalized logical plans, so two reads of
+    // the same table at the same path share.
+    private def planMemo(df: DataFrame, tag: String, params: Any*)
+                        (build: => DataFrame): DataFrame =
+      graft.SessionMemo(df.sparkSession,
+        (df.queryExecution.analyzed.canonicalized, tag, params.toList))(build)
 
-    private def planKey(df: DataFrame, tag: String, params: Any*): AnyRef =
-      (System.identityHashCode(df.sparkSession), df.queryExecution.analyzed.canonicalized,
-        tag, params.toList)
-
-    private def memoized(key: AnyRef, build: => DataFrame): DataFrame = {
-      // Bounded memo: evict the OLDEST half by insertion order, never
-      // the whole map — an all-or-nothing clear would unpersist frames
-      // a concurrent consumer is mid-read on (they'd recompute, but a
-      // long-lived multi-tenant session would thrash).
-      if (memo.size > 64) {
-        import scala.jdk.CollectionConverters._
-        memo.entrySet().asScala.toSeq.sortBy(_.getValue.seq).take(32).foreach { e =>
-          Option(memo.remove(e.getKey)).foreach(_.df.unpersist())
-        }
-      }
-      // NOT computeIfAbsent: builds nest (candidateSets -> shingleSets
-      // on the same map), and a nested computeIfAbsent on one
-      // ConcurrentHashMap throws "recursive update" whenever the two
-      // keys land in the same bin. get/putIfAbsent tolerates nesting;
-      // a racing duplicate build just unpersists its copy.
-      val df = Option(memo.get(key)).map(_.df).getOrElse {
-        val built = MemoEntry(build.persist(), memoSeq.incrementAndGet())
-        Option(memo.putIfAbsent(key, built)) match {
-          case Some(prev) => built.df.unpersist(); prev.df
-          case None => built.df
-        }
-      }
-      if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE) df.persist()
-      df
-    }
-
-    /** Drop every memoized pipeline frame (test isolation hook). */
-    def clearPipelineCache(): Unit = {
-      memo.forEach((_, e) => e.df.unpersist())
-      memo.clear()
-    }
+    /** Drop every memoized frame (test isolation hook). */
+    def clearPipelineCache(): Unit = graft.SessionMemo.clear()
 
     /** Sorted distinct word-3-gram shingle hashes per doc:
       * (doc_id, sh). Materialized once per input — every dedup family
@@ -183,43 +148,33 @@ object Graft {
       graft.Tables.sourceOf(df) match {
         case Some((dir, table)) =>
           val s = df.sparkSession
-          val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-          // the column pair is part of the PATH, not just the sig
-          // (ADVICE r17: distinct (idCol, textCol) pairs over one
+          // the column pair is part of the layout NAME, not just the
+          // sig (ADVICE r17: distinct (idCol, textCol) pairs over one
           // table must get distinct layout dirs — a shared dir would
           // re-provision back and forth and serve one pair's data to
           // the other's still-memoized frame)
           def safe(c: String) = c.replaceAll("[^A-Za-z0-9]", "_")
-          val path = graft.operators.Lake.scratch(
-            s"shingles_${table}_" + dir.replaceAll("[^A-Za-z0-9]", "_") +
-              s"_${safe(idCol)}_${safe(textCol)}")
-          val sig = graft.operators.Lake.sourceSig(fs,
-            new org.apache.hadoop.fs.Path(s"$dir/$table.parquet")) +
-            s"|sh1|$idCol|$textCol"
-          graft.operators.Lake.provisionIfStale(fs, path, sig) {
+          val name = s"shingles_${table}_${safe(idCol)}_${safe(textCol)}"
+          val (path, sig) = Lake.layout(s, name, dir, Seq(table),
+              s"|sh1|$idCol|$textCol") { path =>
             build.write.mode("overwrite").parquet(path)
           }
-          // session identity in the memo key (ADVICE r17): the memo
-          // map is JVM-global — without it a second SparkSession in
-          // the same JVM would read a frame bound to a stopped (or
-          // concurrently live) session
-          val frame = memoized(
-            (System.identityHashCode(s), "sh_layout", path, sig),
-            graft.operators.Lake.readParquet(s, path))
-          frameSig.put(frame, (path, sig))
+          val frame = graft.SessionMemo(s, ("sh_layout", path), sig)(Lake.readLayout(s, path, sig))
+          frameSig.put(frame, (name, dir, sig))
           frame
         case None =>
-          memoized(planKey(df, "sh", idCol, textCol), build)
+          planMemo(df, "sh", idCol, textCol)(build)
       }
     }
 
     /** Layout pedigree for derived-artifact frames: maps a frame this
-      * module handed out back to its (layout path, content signature)
-      * so DOWNSTREAM derivations (candidate pairs) can disk-back per
-      * content too. Weak keys — dies with the frame; identity
-      * semantics match the memo (same key → same frame object). */
+      * module handed out back to its (layout name, source dir, content
+      * signature), so DOWNSTREAM derivations (candidate pairs) can
+      * disk-back per content too, under names from the same
+      * `Lake.layoutPath` formula. Weak keys — dies with the frame;
+      * identity semantics match the memo (same key → same frame). */
     private val frameSig = java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[DataFrame, (String, String)]())
+      new java.util.WeakHashMap[DataFrame, (String, String, String)]())
 
     /** A DERIVED row-subset of a table's shingle layout, registered
       * under the parent's pedigree so the banded-LSH candidate
@@ -240,19 +195,18 @@ object Graft {
       def sub = tableShingles.join(
         survivorIds.select(col("doc_id")), Seq("doc_id"), "left_semi")
       Option(frameSig.get(tableShingles)) match {
-        case Some((path, sig)) =>
-          val s = tableShingles.sparkSession
-          val frame = memoized(
-            (System.identityHashCode(s), "sh_sub", path, sig, subsetTag), sub)
-          // NOTE (ADVICE r18): the registered pedigree path
-          // `${path}_$subsetTag` is a NAMESPACE PREFIX, not a readable
-          // layout — nothing writes parquet or a _graft_src_sig at
-          // that base path. Every downstream consumer
-          // (candidateIdsFromShingles) appends its own suffix before
-          // provisioning; a future consumer that wants to read the
-          // subset frame at this path directly must provision the
-          // subset parquet there first.
-          frameSig.put(frame, (s"${path}_$subsetTag", s"$sig|sub|$subsetTag"))
+        case Some((name, d, sig)) =>
+          val subName = s"${name}_$subsetTag"
+          val frame = graft.SessionMemo(tableShingles.sparkSession,
+            ("sh_sub", Lake.layoutPath(subName, d)), sig)(sub)
+          // NOTE (ADVICE r18): the registered pedigree name `subName`
+          // is a NAMESPACE PREFIX, not a readable layout — nothing
+          // writes parquet or a _graft_src_sig under it. Every
+          // downstream consumer (candidateIdsFromShingles) appends its
+          // own suffix before provisioning; a future consumer that
+          // wants to read the subset frame directly must provision
+          // the subset parquet first.
+          frameSig.put(frame, (subName, d, s"$sig|sub|$subsetTag"))
           frame
         case None => sub
       }
@@ -291,7 +245,7 @@ object Graft {
       }
       // a STREAMING input cannot be persisted — the memo is a batch
       // optimization; the streaming state path computes per-batch
-      if (sh.isStreaming) build else memoized(planKey(sh, "sig", k), build)
+      if (sh.isStreaming) build else planMemo(sh, "sig", k)(build)
     }
 
     private[graft] def bandedKeys(sh: DataFrame, k: Int, bands: Int): DataFrame = {
@@ -330,23 +284,20 @@ object Graft {
       // shingle arrays re-attach from the (already disk-backed)
       // shingle layout at read, so no array is ever stored twice.
       Option(frameSig.get(sh)) match {
-        case Some((layoutPath, contentSig)) =>
+        case Some((name, d, contentSig)) =>
           val s = sh.sparkSession
-          val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-          val path = layoutPath + s"_cand${k}x$bands"
-          val sig = contentSig + s"|cand|$k|$bands"
-          graft.operators.Lake.provisionIfStale(fs, path, sig) {
+          val (path, sig) = Lake.layout(s, s"${name}_cand${k}x$bands", d, Nil,
+              s"$contentSig|cand|$k|$bands") { path =>
             candIds.write.mode("overwrite").parquet(path)
           }
-          memoized((System.identityHashCode(s), "cand_ids", path, sig),
-            graft.operators.Lake.readParquet(s, path))
+          graft.SessionMemo(s, ("cand_ids", path), sig)(Lake.readLayout(s, path, sig))
         case None =>
-          memoized(planKey(sh, "cand_ids", k, bands), candIds)
+          planMemo(sh, "cand_ids", k, bands)(candIds)
       }
     }
 
     private[graft] def candidateSetsFromShingles(sh: DataFrame, k: Int, bands: Int): DataFrame =
-      memoized(planKey(sh, "cand", k, bands),
+      planMemo(sh, "cand", k, bands)(
         candidateIdsFromShingles(sh, k, bands)
           .join(sh.select(col("doc_id"), col("sh").as("sh_a")), col("doc_a") === col("doc_id")).drop("doc_id")
           .join(sh.select(col("doc_id"), col("sh").as("sh_b")), col("doc_b") === col("doc_id")).drop("doc_id"))
@@ -367,7 +318,7 @@ object Graft {
       * from a plan regression (VERDICT r10 #5). */
     private[graft] def exactJaccardCandidates(sh: DataFrame,
                                               threshold: Double): DataFrame =
-      memoized(planKey(sh, "exactCand", threshold), {
+      planMemo(sh, "exactCand", threshold) {
         val ex = sh.select(col("doc_id"), explode(col("sh")).as("s"))
         val dfq = ex.groupBy(col("s")).agg(count(lit(1)).as("df"))
         val w = org.apache.spark.sql.expressions.Window
@@ -386,7 +337,7 @@ object Graft {
               least(col("a.nsh"), col("b.nsh")) >= lit(threshold) * greatest(col("a.nsh"), col("b.nsh")))
           .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
           .distinct()
-      })
+      }
 
     def exactJaccardPairs(df: DataFrame, idCol: String, textCol: String,
                           threshold: Double = 0.8): DataFrame = {
@@ -409,7 +360,7 @@ object Graft {
       // + exact verify; the three other family boards read the memo.
       // The CANDIDATE layer underneath (cand-id band layouts, shingle
       // layouts) stays disk-backed — those are index-shaped.
-      memoized(planKey(sh, "exact", threshold), build)
+      planMemo(sh, "exact", threshold)(build)
     }
 
     /** MinHash+banded-LSH near-dup pairs with exact-Jaccard
@@ -501,7 +452,7 @@ object Graft {
       // The labels frame is memoized on the input pair plan: the
       // clustering entry and the dedup-filter entry both consume the
       // same components, and the iterative loop must not run twice.
-      memoized(planKey(pairs, "cc", aCol, bCol, maxIter, localThreshold),
+      planMemo(pairs, "cc", aCol, bCol, maxIter, localThreshold)(
         dupClustersImpl(pairs, aCol, bCol, maxIter, localThreshold))
     }
 
@@ -688,7 +639,7 @@ object Graft {
       * the CONCATENATION of that subset's pieces. The r14 form was
       * the degenerate subset-size-1 point (pieces=4, key=15 bits),
       * whose 2^15 key space birthday-collides ~N²/2^15 — measured
-      * p ≈ 2 on candidate count under 30x inflation (SimhashFit).
+      * p ≈ 2 on candidate count under 30x inflation (r15).
       * At pieces=6, maxHamming=3 the keys are 30 bits wide across
       * C(6,3)=20 tables: random collisions fall ~2^16-fold, pushing
       * the quadratic term's crossover out past ~10^8 docs while

@@ -437,10 +437,10 @@ object Dedup {
   // keyed on the 30-bit concatenation. History: the r13 24-bit
   // raw-bit-slice form fit p = 1.69 (6-bit keys → N²/64 candidates);
   // the r14 4x15 rewrite fixed the WALL but its 15-bit keys still
-  // birthday-collide ~N²/2^15 — the r15 SimhashFit probe measured
-  // candidate-count p ≈ 2 under 30x inflation (1.9k → 1.49M rows)
+  // birthday-collide ~N²/2^15 — measured in r15, candidate-count
+  // p ≈ 2 under 30x inflation (1.9k → 1.49M rows)
   // while the verified OUTPUT grew linearly. 30-bit keys cut random
-  // collisions ~2^16-fold (same probe after: candidates track the
+  // collisions ~2^16-fold (same measurement after: candidates track the
   // true-pair count), pushing the quadratic crossover past ~10^8
   // docs. Recall is EXACT either way (pigeonhole: <= 3 flips damage
   // <= 3 pieces, so some 3-piece table is clean on both sides).
@@ -814,14 +814,11 @@ object Dedup {
     // doc_ids are dense 0..N-1 (arrival order); the newest 20% is the
     // incoming batch. Parquet row count is a footer-metadata read.
     val cut = docs.count() * 4 / 5
-    val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-    val root = Lake.scratch("band_index_" + d.replaceAll("[^A-Za-z0-9]", "_"))
-    val srcPath = new org.apache.hadoop.fs.Path(s"$d/documents.parquet")
     // Provision the corpus index once per source content: banded keys
     // (the LSH index) + shingle sets (the verification side) — at
     // 100 TB these live bucketed by band_key/doc_id so the batch join
     // is co-located.
-    Lake.provisionIfStale(fs, root, s"cut=$cut|${Lake.sourceSig(fs, srcPath)}") {
+    val (root, _) = Lake.layout(s, "band_index", d, Seq("documents"), s"|cut=$cut") { root =>
       val corpus = docs.filter(col("doc_id") < cut)
       val shc = corpus.select(col("doc_id"),
         sort_array(Shingles.shingleHashes(col("text"))).as("sh"))

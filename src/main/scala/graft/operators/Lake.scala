@@ -56,18 +56,43 @@ object Lake {
       .sorted.mkString("|")
   }
 
-  /** Idempotent layout provisioning gated on a caller-supplied
-    * metadata-only signature: `write` runs only when the recorded
-    * signature differs from `sig`, then `sig` is recorded. The
-    * discipline every amortized layout uses (bucketed tables, IVF
-    * cells, band indexes): the one-time build pays its shuffle at
-    * layout time; the measured query reads the layout. */
-  def provisionIfStale(fs: org.apache.hadoop.fs.FileSystem, path: String,
-                       sig: String)(write: => Unit): Unit =
+  /** The one naming function for artifacts derived from dir `d`
+    * (layouts, bucketed tables, clone markers): the sanitized tail of
+    * the path plus a hash of the raw path. Sanitizing alone is not
+    * injective (`/x/sf0.1` and `/x/sf0_1` both sanitize to
+    * `_x_sf0_1`), and two dirs sharing one layout would rebuild it
+    * back and forth under each other's memoized frames. */
+  def dirTag(d: String): String =
+    f"${d.replaceAll("[^A-Za-z0-9]", "_").takeRight(64)}_${d.hashCode & 0x7fffffff}%08x"
+
+  /** Scratch path of the amortized layout `name` of dir `d`. */
+  def layoutPath(name: String, d: String): String = scratch(s"${name}_${dirTag(d)}")
+
+  /** Content signature of dir `d`'s named source tables plus `salt`
+    * (the layout's constants and formula version, so changing them
+    * rebuilds instead of serving a stale layout). Metadata only. */
+  def tablesSig(s: SparkSession, d: String, tables: Seq[String], salt: String = ""): String = {
+    val fs = FileSystem.get(s.sparkContext.hadoopConfiguration)
+    tables.map(t => sourceSig(fs, new Path(s"$d/$t.parquet"))).mkString("||") + salt
+  }
+
+  /** The amortized-layout verb: layout `name` of dir `d` lives at
+    * [[layoutPath]] and is current while its recorded signature equals
+    * [[tablesSig]] of `tables` plus `salt`. `write(path)` runs only when
+    * it is stale, then the signature is recorded; the one-time build
+    * pays its shuffle at layout time and the measured query reads the
+    * layout. Returns `(path, signature)`. */
+  def layout(s: SparkSession, name: String, d: String, tables: Seq[String], salt: String = "")
+            (write: String => Unit): (String, String) = {
+    val fs = FileSystem.get(s.sparkContext.hadoopConfiguration)
+    val path = layoutPath(name, d)
+    val sig = tablesSig(s, d, tables, salt)
     if (!recordedSig(fs, path).contains(sig)) {
-      write
+      write(path)
       recordSig(fs, path, sig)
     }
+    (path, sig)
+  }
 
   /** Every parquet part file under `p`: `p` itself when it is a file
     * (it names its own footer), else the walk below it, recursing into
@@ -136,7 +161,19 @@ object Lake {
     * `mergeSchema`, missing paths (globs among them) and directories
     * with no part file read through `spark.read.parquet`, which infers
     * or raises as it always did. */
-  def readParquet(spark: SparkSession, paths: String*): DataFrame = {
+  def readParquet(spark: SparkSession, paths: String*): DataFrame =
+    readParquetVia(spark, spark.read, paths)
+
+  /** [[readParquet]] of a layout written by [[layout]], bound to its
+    * signature: the signature rides as a reader option, so the read's
+    * plan — and every memo scope and Spark cache entry derived from it
+    * — is distinct per content generation instead of matching a
+    * superseded generation by path. */
+  def readLayout(spark: SparkSession, path: String, sig: String): DataFrame =
+    readParquetVia(spark, spark.read.option("graft.layout.sig", sig), Seq(path))
+
+  private def readParquetVia(spark: SparkSession, reader: org.apache.spark.sql.DataFrameReader,
+                             paths: Seq[String]): DataFrame = {
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = FileSystem.get(conf)
     val summaries = Seq("_common_metadata", "_metadata")
@@ -159,7 +196,7 @@ object Lake {
     val footer = (summaries.map(n => byPath.find(_.getPath.getName == n)) :+
       byPath.find(f => !summaries.contains(f.getPath.getName))).flatten.headOption
     footer.flatMap(org.apache.spark.sql.graft.Shims.footerSchema(conf, _, Some(spark)))
-      .fold(spark.read.parquet(paths: _*))(spark.read.schema(_).parquet(paths: _*))
+      .fold(reader.parquet(paths: _*))(reader.schema(_).parquet(paths: _*))
   }
 
   private def sigFile(path: String) =

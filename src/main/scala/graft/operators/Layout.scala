@@ -30,31 +30,23 @@ object Layout {
       abit.bitwiseOR(bbit)
     }.reduce(_.bitwiseOR(_))
 
-  private[graft] def zorderedPath(d: String): String = {
-    val suffix = d.replaceAll("[^A-Za-z0-9]", "_")
-    Lake.scratch(s"zorder_lineitem_$suffix")
-  }
+  private[graft] def zorderedPath(d: String): String = Lake.layoutPath("zorder_lineitem", d)
 
   /** Provision the z-ordered lineitem copy once per source version:
     * range-partitioned + sorted by z(l_partkey, l_suppkey), so every
     * file covers a small rectangle of the (partkey, suppkey) plane
     * and a 2-dim box predicate prunes most files on min/max stats.
     * Metadata-only staleness gate, same discipline as every other
-    * amortized layout (Lake.provisionIfStale). */
-  private[graft] def ensureZordered(s: SparkSession, d: String): String = {
-    val path = zorderedPath(d)
-    val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-    val sig = Lake.sourceSig(fs, new org.apache.hadoop.fs.Path(s"$d/lineitem.parquet"))
-    Lake.provisionIfStale(fs, path, sig) {
+    * amortized layout (`Lake.layout`). */
+  private[graft] def ensureZordered(s: SparkSession, d: String): String =
+    Lake.layout(s, "zorder_lineitem", d, Seq("lineitem")) { path =>
       Tables.lineitem(s, d)
         .withColumn("zv", zValue(col("l_partkey"), col("l_suppkey")))
         .repartitionByRange(16, col("zv"))
         .sortWithinPartitions(col("zv"))
         .drop("zv")
         .write.mode("overwrite").parquet(path)
-    }
-    path
-  }
+    }._1
 
   /** Z-ORDER clustering: a 2-dim box predicate over the z-ordered
     * layout. Correctness is layout-independent (the oracle runs the
@@ -227,8 +219,7 @@ object Layout {
     touched
   }
 
-  private[graft] def cowPath(d: String): String =
-    Lake.scratch("cow_lineitem_" + d.replaceAll("[^A-Za-z0-9]", "_"))
+  private[graft] def cowPath(d: String): String = Lake.layoutPath("cow_lineitem", d)
 
   /** Provision (once per source content) the pristine COW layout —
     * range-clustered files + zone-map manifest. The layout is the
@@ -237,14 +228,8 @@ object Layout {
     * EVERY run — a 27 s/100× provisioning bill billed to an op whose
     * own work is one file rewrite; SCALE_r16 measured the rebuild as
     * the op's entire scaling term). */
-  private[graft] def ensureCowLayout(s: SparkSession, d: String): String = {
-    val path = cowPath(d)
-    val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-    val sig = Lake.sourceSig(fs,
-      new org.apache.hadoop.fs.Path(s"$d/lineitem.parquet")) + "|cow1"
-    Lake.provisionIfStale(fs, path, sig)(writeCowLayout(s, d, path))
-    path
-  }
+  private[graft] def ensureCowLayout(s: SparkSession, d: String): String =
+    Lake.layout(s, "cow_lineitem", d, Seq("lineitem"), "|cow1")(writeCowLayout(s, d, _))._1
 
   /** VERSIONED COW delete: like [[cowDelete]], the manifest — never
     * the table — names the files whose range intersects, and only
@@ -370,20 +355,15 @@ object Layout {
       .orderBy(col("side"))
   }
 
-  private[graft] def pointLookupPath(d: String): String = {
-    val suffix = d.replaceAll("[^A-Za-z0-9]", "_")
-    Lake.scratch(s"pointlookup_lineitem_$suffix")
-  }
+  private[graft] def pointLookupPath(d: String): String =
+    Lake.layoutPath("pointlookup_lineitem", d)
 
   /** Provision (once per source version) a range-clustered layout on
     * the lookup key PLUS its zone-map manifest — (file, kmin, kmax)
     * rows written at layout time, exactly the metadata a lakehouse
     * keeps from write-time parquet footers. */
-  private[graft] def ensurePointLayout(s: SparkSession, d: String): String = {
-    val path = pointLookupPath(d)
-    val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-    val sig = Lake.sourceSig(fs, new org.apache.hadoop.fs.Path(s"$d/lineitem.parquet"))
-    Lake.provisionIfStale(fs, path, sig) {
+  private[graft] def ensurePointLayout(s: SparkSession, d: String): String =
+    Lake.layout(s, "pointlookup_lineitem", d, Seq("lineitem")) { path =>
       Tables.lineitem(s, d)
         .repartitionByRange(16, col("l_orderkey"))
         .sortWithinPartitions(col("l_orderkey"))
@@ -393,9 +373,7 @@ object Layout {
         .agg(min("l_orderkey").as("kmin"), max("l_orderkey").as("kmax"))
         .coalesce(1)
         .write.mode("overwrite").parquet(s"$path/manifest")
-    }
-    path
-  }
+    }._1
 
   /** MANIFEST-PRUNED POINT LOOKUP: a key lookup consults the zone-map
     * manifest (a handful of rows, metadata-scale) to find the file(s)

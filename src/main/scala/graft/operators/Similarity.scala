@@ -21,24 +21,8 @@ object Similarity {
   private val QueryCount = 16
   private val TopK = 5
 
-  // Family-shared memo (the api.Graft.dedup discipline): one persisted
-  // copy per (session, dir, source-content) instead of a fresh
-  // persist() per query — the r7 review caught the per-call persist
-  // accumulating 16 cached copies of the same corpus across the
-  // family. Keys carry the embeddings SOURCE SIGNATURE so a
-  // mid-session regeneration of the table (it has happened — the r7
-  // testdata gotcha) rebuilds instead of serving a frame bound to
-  // deleted files; a superseded same-tag entry is evicted and
-  // unpersisted on insert. Entries re-persist themselves if the
-  // harness's family-boundary clearCache() dropped their blocks.
-  private final case class FamKey(session: Int, dir: String, tag: String, sig: String)
-  private val famMemo =
-    new java.util.concurrent.ConcurrentHashMap[FamKey, DataFrame]()
-
-  private def embSig(s: SparkSession, d: String): String = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-    Lake.sourceSig(fs, new org.apache.hadoop.fs.Path(s"$d/embeddings.parquet"))
-  }
+  private def embSig(s: SparkSession, d: String): String =
+    Lake.tablesSig(s, d, Seq("embeddings"))
 
   /** Corpus row count from the catalog-stats memo (VERDICT r16 #3:
     * the plane-ladder np derives once per corpus content instead of a
@@ -47,13 +31,12 @@ object Similarity {
   private def embCount(s: SparkSession, d: String): Long =
     Tables.rowCount(s, d, "embeddings")
 
+  /** Family frames: one persisted copy per (session, dir, tag) and
+    * source-content generation (`SessionMemo`), so a mid-session
+    * regeneration of the table rebuilds and unpersists the old copy. */
   private def famMemoized(s: SparkSession, d: String, tag: String, sig: String)
-                         (build: => DataFrame): DataFrame = {
-    val key = FamKey(System.identityHashCode(s), d, tag, sig)
-    // evict the superseded source-content generation, if any
-    SessionMemo(famMemo, s, key)(k => k.session == key.session && k.dir == key.dir &&
-      k.tag == key.tag && k.sig != key.sig)(build)
-  }
+                         (build: => DataFrame): DataFrame =
+    SessionMemo(s, (d, tag), sig)(build)
 
   /** Normalized corpus: (vec_id, v, nrm). Zero-norm vectors are
     * excluded ON BOTH ENGINES (ADVICE r15): a zero norm makes every
@@ -325,12 +308,7 @@ object Similarity {
     // cell-partitioned corpus is written once per source content, so
     // the measured query is the partition-pruned probe — the layout
     // shuffle amortizes over every future probe, exactly as at 100 TB.
-    val path = graft.operators.Lake.scratch(
-      "ivf_cells_" + d.replaceAll("[^A-Za-z0-9]", "_"))
-    val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-    val srcSig = Lake.sourceSig(fs,
-      new org.apache.hadoop.fs.Path(s"$d/embeddings.parquet")) + s"|nc=$NCells"
-    Lake.provisionIfStale(fs, path, srcSig) {
+    val (path, _) = Lake.layout(s, "ivf_cells", d, Seq("embeddings"), s"|nc=$NCells") { path =>
       asg.filter(col("rk") === 1)
         .select(col("vec_id"), col("v"), col("nrm"), col("cid"))
         .write.mode("overwrite").partitionBy("cid").parquet(path)
@@ -439,18 +417,14 @@ object Similarity {
     // re-encoding per session; the sig salts the constants and the
     // formula version so a constant change rebuilds, never serves
     // stale codes.
-    val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-    val path = Lake.scratch("pq_codes_" + d.replaceAll("[^A-Za-z0-9]", "_"))
-    val srcSig = Lake.sourceSig(fs,
-      new org.apache.hadoop.fs.Path(s"$d/embeddings.parquet")) +
-      s"|m=$M|sd=$SubDim|k=$NCodes|q=$QueryCount|pqc1"
-    Lake.provisionIfStale(fs, path, srcSig) {
+    val (path, srcSig) = Lake.layout(s, "pq_codes", d, Seq("embeddings"),
+        s"|m=$M|sd=$SubDim|k=$NCodes|q=$QueryCount|pqc1") { path =>
       subDists(n).groupBy(col("vec_id"), col("m"))
         .agg(min_by(col("cid"), struct(col("dist"), col("cid"))).as("cid"))
         .select(col("vec_id"), col("m"), col("cid"))
         .write.mode("overwrite").parquet(path)
     }
-    val codes = famMemoized(s, d, "pq_codes", srcSig)(Lake.readParquet(s, path))
+    val codes = famMemoized(s, d, "pq_codes", srcSig)(Lake.readLayout(s, path, srcSig))
     val qd = subDists(n.filter(col("vec_id") < QueryCount))
       .select(col("vec_id").as("query_id"), col("m").as("qm"),
         col("cid").as("qcid"), col("dist").as("qdist"))
@@ -1102,6 +1076,9 @@ object Similarity {
     * oracle CTE applies the same expression. */
   val KnnCellCap = 1024L
 
+  /** Signature salt of the directed and mutual k-NN graph layouts. */
+  private val KnnSalt = s"|nc=$NCells|tgt=$KnnCellTarget|cap=$KnnCellCap|cc4|k=$KnnK"
+
   /** Corpus assigned to ADAPTIVE cells, TWO-LEVEL (coarse→fine), so
     * the assignment stage itself scales: a flat argmax against
     * K = N/KnnCellTarget centroids would be O(N·K) = O(N²/64)
@@ -1213,8 +1190,6 @@ object Similarity {
     * and triangle queries join the layout against itself, so one
     * cached read serves all four plan legs. */
   private def adaptiveCellsLayout(s: SparkSession, d: String): DataFrame = {
-    val path = Lake.scratch("knn_cells_" + d.replaceAll("[^A-Za-z0-9]", "_"))
-    val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
     // the layout bakes in the cell constants — salt them into the
     // staleness signature so changing them rebuilds instead of
     // silently serving a layout cut with the old cell count
@@ -1222,15 +1197,13 @@ object Similarity {
     // disjoint capped-id space; r15: √-scaled coarse count +
     // KnnCellCap sub-sharding) — a layout cut with an older formula
     // must rebuild, not silently serve
-    val srcSig = Lake.sourceSig(fs,
-      new org.apache.hadoop.fs.Path(s"$d/embeddings.parquet")) +
-      s"|nc=$NCells|tgt=$KnnCellTarget|cap=$KnnCellCap|cc4"
-    Lake.provisionIfStale(fs, path, srcSig) {
+    val (path, srcSig) = Lake.layout(s, "knn_cells", d, Seq("embeddings"),
+        s"|nc=$NCells|tgt=$KnnCellTarget|cap=$KnnCellCap|cc4") { path =>
       adaptiveCells(s, d).repartition(col("cid"))
         .write.mode("overwrite").partitionBy("cid").parquet(path)
     }
     famMemoized(s, d, "cells_layout", srcSig) {
-      s.read.parquet(path)
+      Lake.readLayout(s, path, srcSig)
         .select(col("vec_id"), col("v"), col("nrm"), col("cid").cast("long").as("cid"))
     }
   }
@@ -1285,61 +1258,6 @@ object Similarity {
     (cl, knn)
   }
 
-  /** Stage-timing probe for the knn-family build chain (r15
-    * suite-100 run-down): times each family-memoized stage in
-    * dependency order (so each line is THAT stage's marginal cost)
-    * plus a cell-size census — the cell-local pair join downstream
-    * is Σ|cell|²-shaped, so a skewed census explains a slow family
-    * faster than any end-to-end wall. */
-  private[graft] def buildProbe(s: SparkSession, d: String): Unit = {
-    def t[A](name: String)(work: => A): Unit = {
-      val t0 = System.nanoTime()
-      work
-      System.err.println(String.format(java.util.Locale.ROOT,
-        "KNN_BUILD %-12s %8.2fs", name,
-        Double.box((System.nanoTime() - t0) / 1e9)))
-    }
-    t("corpus")(corpus(s, d).count())
-    t("acells")(adaptiveCells(s, d).count())
-    t("layout")(adaptiveCellsLayout(s, d).count())
-    t("knn_dir")(knnDirectedMemo(s, d).count())
-    t("knn_mutual")(knnMutual(s, d).count())
-    adaptiveCellsLayout(s, d).groupBy(col("cid")).count()
-      .agg(count(lit(1)).as("n_cells"), max(col("count")).as("max_cell"),
-        sum(col("count") * col("count")).as("sum_sq"))
-      .collect().foreach(r => System.err.println(
-        s"KNN_BUILD census n_cells=${r.get(0)} max_cell=${r.get(1)} sum_sq=${r.get(2)}"))
-  }
-
-  /** Stage decomposition of m_cross_modal_dedup IN SUITE CONTEXT
-    * (VERDICT r17 #1, the FluencyProbe pattern): the whole-registry
-    * suite clears ALL Spark caches at each family boundary, so the
-    * first m-op to consume the knn family re-pays every famMemoized
-    * persist from the cleared state. Reproduce exactly that state
-    * (clearCache), then time each dependency in order — each line is
-    * that stage's MARGINAL cost — then the op itself (riding the
-    * rebuilt memos) and a steady-state second run. If cold ≈
-    * knn_mutual + shingles + steady, the suite wall is family-build
-    * attribution; any residue is the op's own term. */
-  private[graft] def crossModalProbe(s: SparkSession, d: String): Unit = {
-    def t[A](name: String)(work: => A): Unit = {
-      val t0 = System.nanoTime()
-      work
-      System.err.println(String.format(java.util.Locale.ROOT,
-        "XMODAL %-16s %8.2fs", name,
-        Double.box((System.nanoTime() - t0) / 1e9)))
-    }
-    s.catalog.clearCache() // the suite's family-boundary state
-    t("knn_mutual")(knnMutual(s, d).filter(col("n_dir") === 2).count())
-    t("cap_shingles")(graft.api.Graft.dedup.shingleSets(
-      Tables.documents(s, d).filter(col("doc_id") % 11 =!= 0),
-      "doc_id", "text").count())
-    t("op_after_deps")(mCrossModalDedup.fn(s, d).count())
-    s.catalog.clearCache()
-    t("op_cold")(mCrossModalDedup.fn(s, d).count())
-    t("op_steady")(mCrossModalDedup.fn(s, d).count())
-  }
-
   /** The DIRECTED per-src top-k frame, family-memoized: every graph
     * consumer (the symmetric artifact, NN-descent's base list, the
     * MST's weighted edges, the mutual-edge build below) was re-paying
@@ -1350,22 +1268,18 @@ object Similarity {
     * copy of the whole assignment pipeline. */
   private def knnDirectedMemo(s: SparkSession, d: String): DataFrame = {
     // DISK-BACKED (r17): the directed top-k is the family's most
-    // expensive derivation — 28.5 s at 100× from a cold cache
-    // (crossModalProbe), and EVERY fresh session or cache-clear
+    // expensive derivation — 28.5 s at 100× from a cold cache,
+    // and EVERY fresh session or cache-clear
     // boundary re-paid it. A real pipeline materializes its k-NN
     // graph as a table (it IS the artifact downstream dedup/graph
-    // stages consume); provisionIfStale makes the rebuild a parquet
+    // stages consume); the layout verb makes the rebuild a parquet
     // re-READ (~1 s) instead of a re-derivation, once per source
     // content. Slim columns only — no vector ever lands on disk
     // twice; consumers needing v re-join the cells layout.
-    val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-    val path = Lake.scratch("knn_dir_" + d.replaceAll("[^A-Za-z0-9]", "_"))
-    val sig = embSig(s, d) +
-      s"|nc=$NCells|tgt=$KnnCellTarget|cap=$KnnCellCap|cc4|k=$KnnK"
-    Lake.provisionIfStale(fs, path, sig) {
+    val (path, sig) = Lake.layout(s, "knn_dir", d, Seq("embeddings"), KnnSalt) { path =>
       knnDirected(s, d)._2.write.mode("overwrite").parquet(path)
     }
-    famMemoized(s, d, "knn_dir", sig)(Lake.readParquet(s, path))
+    famMemoized(s, d, "knn_dir", sig)(Lake.readLayout(s, path, sig))
   }
 
   /** Mutual (reciprocal) edge set of the k-NN graph — shared by the
@@ -1383,11 +1297,7 @@ object Similarity {
     // Disk-backed like knn_dir (same rationale: the mutual-edge
     // shuffle at 100× is seconds of recompute vs a sub-second
     // metadata-sized re-read, and it feeds SEVEN graph consumers).
-    val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-    val path = Lake.scratch("knn_mutual_" + d.replaceAll("[^A-Za-z0-9]", "_"))
-    val sig = embSig(s, d) +
-      s"|nc=$NCells|tgt=$KnnCellTarget|cap=$KnnCellCap|cc4|k=$KnnK"
-    Lake.provisionIfStale(fs, path, sig) {
+    val (path, sig) = Lake.layout(s, "knn_mutual", d, Seq("embeddings"), KnnSalt) { path =>
       knnDirectedMemo(s, d)
         .groupBy(least(col("src"), col("dst")).as("a"),
           greatest(col("src"), col("dst")).as("b"))
@@ -1396,7 +1306,7 @@ object Similarity {
         .select(col("a"), col("b"), col("cid"), col("n_dir"), col("mcos"))
         .write.mode("overwrite").parquet(path)
     }
-    famMemoized(s, d, "knn_mutual", sig)(Lake.readParquet(s, path))
+    famMemoized(s, d, "knn_mutual", sig)(Lake.readLayout(s, path, sig))
   }
 
   /** Shared per-round lineage cut for the iterating graph ops
@@ -1926,10 +1836,8 @@ object Similarity {
     * (+3 s measured); inner rounds still ScopedCache so round 2
     * never recomputes round 1 on a cold build. */
   private def labelPropAssignments(s: SparkSession, d: String): DataFrame =
-    famMemoized(s, d, "label_prop", embSig(s, d) + "|" + {
-      val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-      Lake.sourceSig(fs, new org.apache.hadoop.fs.Path(s"$d/documents.parquet"))
-    })(labelPropBuild(s, d))
+    famMemoized(s, d, "label_prop", Lake.tablesSig(s, d, Seq("embeddings", "documents")))(
+      labelPropBuild(s, d))
 
   private def labelPropBuild(s: SparkSession, d: String): DataFrame = {
     val me = knnMutual(s, d).filter(col("n_dir") === 2)

@@ -225,7 +225,7 @@ object TextAnalysis {
   ) { (s, d) =>
     val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
     // Transitions as PACKED INTEGER CODES, recomputed per pass
-    // (r16, from the FluencyProbe decomposition at the 100× anchor):
+    // (r16, from a stage decomposition at the 100× anchor):
     // the r15 form cached one row per character transition and the
     // first r16 attempt pre-aggregated (doc, bigram) — but a doc's
     // transitions all live in ONE task, so that groupBy shuffled the

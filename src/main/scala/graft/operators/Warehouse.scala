@@ -155,10 +155,8 @@ object Warehouse {
        |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
        |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin
   ) { (s, d) =>
-    // Suffix is the FULL sanitized path (no lossy hash-mod): distinct
-    // sf dirs can never collide on the same persistent table name.
-    val suffix = d.replaceAll("[^A-Za-z0-9]", "_")
-    val oTab = s"graft_orders_b$suffix"; val lTab = s"graft_lineitem_b$suffix"
+    val tag = Lake.dirTag(d) // distinct dirs never share a persistent table
+    val oTab = s"graft_orders_b_$tag"; val lTab = s"graft_lineitem_b_$tag"
     // the in-memory catalog dies with the session but the bucketed
     // layout on disk persists — re-register it instead of rewriting
     // (paying the layout shuffle once is the point of bucketing)

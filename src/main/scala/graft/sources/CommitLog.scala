@@ -544,11 +544,8 @@ object CommitLog {
 
   private def clonesDir(tableDir: String) = new Path(tableDir, "_clones")
 
-  private def cloneMarker(srcDir: String, dstDir: String): Path = {
-    val sane = dstDir.replaceAll("[^A-Za-z0-9]", "_").takeRight(64)
-    // hash disambiguates dst paths that sanitize identically
-    new Path(clonesDir(srcDir), f"${sane}_${dstDir.hashCode & 0x7fffffff}%08x.ref")
-  }
+  private def cloneMarker(srcDir: String, dstDir: String): Path =
+    new Path(clonesDir(srcDir), s"${Lake.dirTag(dstDir)}.ref")
 
   /** Registered clone dirs of this table (back-reference markers). */
   def registeredClones(fs: FileSystem, tableDir: String): Seq[String] = {

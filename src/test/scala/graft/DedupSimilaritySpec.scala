@@ -199,8 +199,7 @@ class DedupSimilaritySpec extends SparkSpec {
     val g = Similarity.sKnnGraph.fn(spark, sfDir).collect()
     assert(g.nonEmpty)
     // the graph build provisioned the cell-partitioned layout
-    val path = graft.operators.Lake.scratch("knn_cells_" +
-      sfDir.replaceAll("[^A-Za-z0-9]", "_"))
+    val path = graft.operators.Lake.layoutPath("knn_cells", sfDir)
     val layout = spark.read.parquet(path)
     assert(layout.count() == Tables.embeddings(spark, sfDir).count(),
       "every vector must be in exactly one cell of the layout (no drops)")
@@ -459,7 +458,7 @@ class DedupSimilaritySpec extends SparkSpec {
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
     Dedup.dIncrementalDedup.fn(spark, sfDir).count()
     val root = new org.apache.hadoop.fs.Path(
-      graft.operators.Lake.scratch("band_index_" + sfDir.replaceAll("[^A-Za-z0-9]", "_")))
+      graft.operators.Lake.layoutPath("band_index", sfDir))
     def sig(): Long = fs.listStatus(new org.apache.hadoop.fs.Path(root, "bands"))
       .map(st => st.getModificationTime + st.getLen).sum
     val before = sig()

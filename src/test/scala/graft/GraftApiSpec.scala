@@ -181,6 +181,32 @@ class GraftApiSpec extends SparkSpec {
     }
   }
 
+  test("shingleSets over a table rewritten in place serves the new content and releases the old") {
+    import spark.implicits._
+    val dir = graft.operators.Lake.scratch("regen_docs")
+    def generation(texts: Seq[String]): Unit =
+      texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    def shingles() = Graft.dedup.shingleSets(Tables.documents(spark, dir), "doc_id", "text")
+    def cached(df: org.apache.spark.sql.DataFrame) = spark.sharedState.cacheManager
+      .lookupCachedData(df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
+    generation(Seq("the quick brown fox jumps", "over the lazy dog again"))
+    val old = shingles()
+    assert(old.count() == 2)
+    val oldCache = cached(old).get
+    assert(oldCache.cachedRepresentation.cacheBuilder.isCachedColumnBuffersLoaded)
+    generation(Seq("a b c", "d e f", "g h i", "j k l"))
+    val fresh = shingles()
+    assert(fresh.select("doc_id").as[Long].collect().sorted.toSeq == Seq(0L, 1L, 2L, 3L),
+      "a rewritten table must not be served its earlier generation's shingles")
+    assert(!cached(fresh).exists(_ eq oldCache))
+    assert(!oldCache.cachedRepresentation.cacheBuilder.isCachedColumnBuffersLoaded)
+    assert(old.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
+      "the earlier generation's frame must be unpersisted, not leaked")
+    assert(fresh.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+    fresh.unpersist()
+  }
+
   test("lake ACL transforms: chown/chmod respect their predicates, audit flags other-read") {
     import spark.implicits._
     val ns = Seq(("a", "ingest", "data", 640), ("b", "ingest", "data", 640))

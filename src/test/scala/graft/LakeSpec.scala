@@ -322,4 +322,41 @@ class LakeSpec extends SparkSpec {
     fs.mkdirs(new Path(s"$dir/empty"))
     intercept[java.io.IOException](Lake.footerRows(spark, Seq(s"$dir/empty")))
   }
+
+  test("layout verb writes once per signature and rebuilds after a source part file is rewritten") {
+    import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
+    val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    val d = Lake.scratch("layout_verb_src")
+    fs.delete(new Path(d), true)
+    spark.range(0, 10).coalesce(1).write.parquet(s"$d/t.parquet")
+    var writes = 0
+    def provision(salt: String) = Lake.layout(spark, "verb_probe", d, Seq("t"), salt) { p =>
+      writes += 1
+      spark.range(0, 3).write.mode("overwrite").parquet(p)
+    }
+    val (path, sig) = provision("|v1")
+    assert(path == Lake.layoutPath("verb_probe", d) && writes == 1)
+    assert(provision("|v1") == ((path, sig)) && writes == 1, "an unchanged source must not rebuild")
+    // rewrite the one part file in place: same name, new bytes
+    val part = fs.listStatus(new Path(s"$d/t.parquet")).map(_.getPath)
+      .find(_.getName.endsWith(".parquet")).get
+    spark.range(0, 50).coalesce(1).write.parquet(s"$d/next")
+    val nextPart = fs.listStatus(new Path(s"$d/next")).map(_.getPath)
+      .find(_.getName.endsWith(".parquet")).get
+    FileUtil.copy(fs, nextPart, fs, part, false, true, spark.sparkContext.hadoopConfiguration)
+    val (_, sig2) = provision("|v1")
+    assert(writes == 2 && sig2 != sig, "a rewritten part file must rebuild the layout")
+    provision("|v1")
+    assert(writes == 2)
+    provision("|v2")
+    assert(writes == 3, "a changed salt must rebuild the layout")
+  }
+
+  test("dirs that sanitize alike get distinct layout paths and bucketed tables") {
+    import graft.operators.Layout
+    assert(Layout.zorderedPath("/x/sf0.1") != Layout.zorderedPath("/x/sf0_1"))
+    assert(Lake.layoutPath("knn_cells", "/x/sf0.1") != Lake.layoutPath("knn_cells", "/x/sf0_1"))
+    assert(Lake.dirTag("/x/sf0.1") != Lake.dirTag("/x/sf0_1"))
+    assert(Lake.dirTag("/x/sf0.1").matches("[A-Za-z0-9_]+"), "a tag must stay a safe table name")
+  }
 }

@@ -20,6 +20,7 @@ class LayoutAnalyticsSpec extends SparkSpec {
   test("z-order layout: most files are skippable for the 2-dim box predicate") {
     Layout.lakeZorder.fn(spark, sfDir).count() // ensures provisioning
     val path = Layout.zorderedPath(sfDir)
+    assert(Layout.ensureZordered(spark, sfDir) == path)
     val perFile = spark.read.parquet(path)
       .groupBy(input_file_name().as("f"))
       .agg(min("l_partkey").as("pmin"), max("l_partkey").as("pmax"),
@@ -156,6 +157,7 @@ class LayoutAnalyticsSpec extends SparkSpec {
     "as a new version over a pristine provisioned layout") {
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
     val dir = Layout.cowPath(sfDir)
+    assert(Layout.ensureCowLayout(spark, sfDir) == dir)
     def v0Identity(): Map[String, (Long, Long)] =
       fs.listStatus(new org.apache.hadoop.fs.Path(dir))
         .filter(_.getPath.getName.endsWith(".parquet"))
@@ -277,6 +279,7 @@ class LayoutAnalyticsSpec extends SparkSpec {
       .filter(col("l_orderkey") === 777).count()
     assert(rows.length.toLong == direct)
     val path = Layout.pointLookupPath(sfDir)
+    assert(Layout.ensurePointLayout(spark, sfDir) == path)
     val total = spark.read.parquet(path + "/manifest").count()
     val cand = Layout.candidateFiles(spark, path, 777L)
     assert(total >= 8, s"expected a multi-file layout, got $total")

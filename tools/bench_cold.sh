@@ -4,7 +4,7 @@
 # synthetic inflations, which are test DATA, not derived layouts), then
 # run the 25-op headline bench once and commit the result as
 # docs/bench_cold.json. The point is falsifiability: every
-# provisionIfStale layout's build cost becomes a measured, per-round
+# `Lake.layout` layout's build cost becomes a measured, per-round
 # committed number instead of an invisible one-time cost no bench run
 # ever pays again. Round cadence: run once per round after the final
 # code state, commit docs/bench_cold.json alongside the round artifacts.
