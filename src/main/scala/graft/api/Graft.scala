@@ -75,7 +75,8 @@ object Graft {
         .groupBy(col("pair")).agg(sum(col("cnt")).as("weight"))
         // global top-K over the distinct-PAIR frame (bounded by the
         // character-pair alphabet, corpus-independent) — adjudicated
-        // in PLANS_r7/r8: the cut never sorts corpus-sized data
+        // in the round-7/8 plan audits: the cut never sorts
+        // corpus-sized data
         .orderBy(col("weight").desc, col("pair")).limit(topN)
 
     /** Deterministic training shuffle of any integer-keyed frame (the
@@ -469,10 +470,6 @@ object Graft {
       val base = pairs
         .select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
         .persist()
-      val debug = sys.env.contains("GRAFT_CC_DEBUG")
-      val t0 = System.nanoTime()
-      def dbg(msg: => String): Unit =
-        if (debug) println(f"[dupClusters +${(System.nanoTime() - t0) / 1e9}%.2fs] $msg")
       val nPairs = base.count()
       // Regime pick, AQE-style. The pair list is NOT the corpus: it is
       // the verified output of blocked candidate generation, i.e. the
@@ -515,25 +512,20 @@ object Graft {
       val edges = base
         .union(base.select(col("dst").as("src"), col("src").as("dst")))
         .persist()
-      // Lineage control each round: reliable checkpoint when the
-      // session has a checkpoint dir (fault-tolerant on a real
-      // cluster — an executor/driver restart replays from the
-      // checkpoint files, not from a dead BlockManager), else
-      // localCheckpoint (single-JVM bench/test runs). Either way the
-      // LOGICAL lineage truncates, keeping driver-side planning O(1)
-      // per round — persist alone lets the plan double every iteration
-      // and analysis/optimization time dominates.
+      // Lineage control each round (Similarity.ckptLineage: reliable
+      // checkpoint when the session has a checkpoint dir, else local):
+      // the LOGICAL lineage truncates, keeping driver-side planning
+      // O(1) per round — persist alone lets the plan double every
+      // iteration and analysis/optimization time dominates.
       //
       // Checkpointed frames carry no size stats, so the planner would
       // shuffle-join even a 256-edge graph; the pair list count picks
       // the regime — small graphs broadcast the label side and skip
       // the intermediate checkpoint (2 jobs/round), large graphs keep
       // shuffle joins and materialize prop once per round.
-      val reliable = pairs.sparkSession.sparkContext.getCheckpointDir.isDefined
       def ckpt(df: DataFrame): DataFrame =
-        if (reliable) df.checkpoint() else df.localCheckpoint()
+        graft.operators.Similarity.ckptLineage(pairs.sparkSession, df)
       val small = 2 * nPairs < 1000000L
-      dbg(s"edges counted, small=$small, reliable_ckpt=$reliable")
       def maybeBcast(df: DataFrame): DataFrame = if (small) broadcast(df) else df
       var labels = ckpt(edges.select(col("src").as("node")).distinct()
         .select(col("node"), col("node").as("lbl")))
@@ -561,7 +553,6 @@ object Graft {
         done = cur == prev
         prev = cur
         it += 1
-        dbg(s"round $it done (sum=$cur)")
       }
       base.unpersist()
       edges.unpersist()
@@ -1248,7 +1239,8 @@ object Graft {
       // the one WindowExec-warning site in this file): bounded by
       // construction, because its input is only the per-partition
       // survivors of the first sweep (frontier-candidate-sized, not
-      // corpus-sized) — adjudicated in PLANS_r7/r8, safe at any scale
+      // corpus-sized) — adjudicated in the round-7/8 plan audits,
+      // safe at any scale
       sweep(sweep(pts.withColumn("_pid", spark_partition_id()), Seq(col("_pid")))
           .drop("_pid"), Seq.empty)
         .select(col("_mn").as(minCol), col("_mx").as(maxCol))

@@ -48,7 +48,7 @@ object Dedup {
     * each doc's rarest shingles, so popular/boilerplate shingles never
     * generate candidates — the standard AllPairs ordering, and the
     * difference between linear and quadratic on corpora with shared
-    * vocabulary (round-7 ScaleStress: length-band blocking ran 113x at
+    * vocabulary (round-7 scale run: length-band blocking ran 113x at
     * 10x data — every same-length doc paired; hash-ordered prefixes
     * still 31x because popular shingles land in prefixes; DF-ordered
     * prefixes collide only on genuinely shared rare content). The

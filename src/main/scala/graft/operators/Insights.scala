@@ -184,7 +184,7 @@ object Insights {
     // global top-K cut over the DISTINCT-TOKEN frame (vocabulary-sized
     // at any corpus size, ~10^5-10^6 rows at 100 TB) — the global sort
     // is bounded by the vocabulary, never the corpus; adjudicated in
-    // PLANS_r7/r8
+    // the round-7/8 plan audits
     val vocab = toks.groupBy(col("tok")).agg(count(lit(1)).as("c"))
       .orderBy(col("c").desc, col("tok")).limit(20)
       .select(col("tok").as("v_tok"))

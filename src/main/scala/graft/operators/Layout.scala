@@ -151,14 +151,14 @@ object Layout {
   private[graft] def writeCowLayout(s: SparkSession, d: String, dir: String): Unit = {
     val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(dir), true)
-    // FILE-SIZE-BOUNDED range layout (SCALE_r10: the fixed-8-file
-    // variant made each file grow linearly with the table, so the
-    // delete's one-file rewrite unit grew linearly too — 2.7x at 10x
-    // data for a metadata-claimed op). A selective COW delete's cost
-    // driver is the SIZE of the touched file, not the file count:
-    // cap rows-per-file so the rewrite unit is constant at any
-    // scale, and let the file count (= manifest rows, metadata)
-    // carry the growth. The row count is a parquet-footer read.
+    // FILE-SIZE-BOUNDED range layout (round-10 scale run: the
+    // fixed-8-file variant made each file grow linearly with the
+    // table, so the delete's one-file rewrite unit grew linearly too
+    // — 2.7x at 10x data for a metadata-claimed op). A selective COW
+    // delete's cost driver is the SIZE of the touched file, not the
+    // file count: cap rows-per-file so the rewrite unit is constant
+    // at any scale, and let the file count (= manifest rows,
+    // metadata) carry the growth. The row count is a parquet-footer read.
     val rows = Tables.lineitem(s, d).count()
     val parts = math.max(8, math.ceil(rows / 65536.0).toInt)
     // deliberately UNcached double read: repartitionByRange's range
@@ -226,8 +226,8 @@ object Layout {
     * delete ceremony's V0: it is never mutated, so repeated runs pay
     * metadata only (the r15 form rebuilt the full sorted layout on
     * EVERY run — a 27 s/100× provisioning bill billed to an op whose
-    * own work is one file rewrite; SCALE_r16 measured the rebuild as
-    * the op's entire scaling term). */
+    * own work is one file rewrite; the round-16 scale run measured
+    * the rebuild as the op's entire scaling term). */
   private[graft] def ensureCowLayout(s: SparkSession, d: String): String =
     Lake.layout(s, "cow_lineitem", d, Seq("lineitem"), "|cow1")(writeCowLayout(s, d, _))._1
 

@@ -136,7 +136,7 @@ object Multimodal {
   // bucket) — signs then split on content, not the shared baseline.
   // The plane COUNT scales with the corpus: np = clamp(4..12,
   // ceil_log2(ceil(N/64))) targets ~64 docs per bucket instead of the
-  // ~N^2/2^np a FIXED plane count degrades to (round-7 ScaleStress
+  // ~N^2/2^np a FIXED plane count degrades to (round-7 scale run
   // measured the fixed-16-bucket version at 11.9x wall-clock for 10x
   // data). The LCG plane sequence is shared, so smaller corpora use a
   // prefix of the same planes; past N ~ 64*2^12 extend FpPlanesMax.

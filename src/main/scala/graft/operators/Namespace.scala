@@ -96,8 +96,13 @@ object Namespace {
       val txt = try new String(
         org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
       finally in.close()
+      def malformed = new java.io.IOException(
+        s"malformed quota file $p: '${txt.trim.take(64)}'")
       val m = txt.trim.split("\\s+").map { kv =>
-        val Array(k, v) = kv.split("="); k -> v.toLong
+        kv.split("=") match {
+          case Array(k, v) => k -> v.toLongOption.getOrElse(throw malformed)
+          case _ => throw malformed
+        }
       }.toMap
       (m.getOrElse("ns", QuotaDontSet), m.getOrElse("rows", QuotaDontSet))
     }

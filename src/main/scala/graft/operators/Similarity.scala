@@ -1083,7 +1083,8 @@ object Similarity {
     * the assignment stage itself scales: a flat argmax against
     * K = N/KnnCellTarget centroids would be O(N·K) = O(N²/64)
     * cosines with an N-proportional broadcast — the exact quadratic
-    * shape the ScaleStress methodology exists to catch. Instead:
+    * shape the scale tool's base-vs-scaled ratio exists to catch.
+    * Instead:
     * (1) every vector argmax-assigns to one of [[knnCoarseCount]]
     * ≈ √K COARSE centroids (O(N·√K), modest broadcast); (2) the K
     * fine centroids carry their own coarse assignment, so the fine
@@ -1310,7 +1311,8 @@ object Similarity {
   }
 
   /** Shared per-round lineage cut for the iterating graph ops
-    * (kcore peel, Boruvka rounds, the modularity edge frame):
+    * (kcore peel, Boruvka rounds, the modularity edge frame, the
+    * dupClusters label loop):
     * reliable checkpoint when the session has a checkpoint dir
     * (fault-tolerant on a real cluster — an executor/driver restart
     * replays from the checkpoint files), else localCheckpoint
@@ -1318,7 +1320,7 @@ object Similarity {
     * truncates — persist alone still prints the InMemoryRelation
     * inner plan at every reference, and a loop that references the
     * previous frame k times grows the AQE plan-update string ~k^R. */
-  private def ckptLineage(s: SparkSession, df: DataFrame): DataFrame =
+  private[graft] def ckptLineage(s: SparkSession, df: DataFrame): DataFrame =
     if (s.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
     else df.localCheckpoint()
 

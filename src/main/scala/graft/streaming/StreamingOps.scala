@@ -1118,9 +1118,11 @@ object StreamingOps {
           if (!fs.exists(hwmPath)) -1L
           else {
             val in = fs.open(hwmPath)
-            try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
-              .trim.toLong
-            finally in.close()
+            val txt =
+              try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
+              finally in.close()
+            txt.trim.toLongOption.getOrElse(throw new java.io.IOException(
+              s"sink high-water mark $hwmPath does not hold a batch id: '${txt.take(64)}'"))
           }
         if (batchId > hwm) {
           val rel = s"data/sink-$sinkId-batch-$batchId"
@@ -1131,8 +1133,14 @@ object StreamingOps {
             graft.sources.CommitLog.writeCommit(
               batch.sparkSession, tableDir, batch, rel,
               ts = System.currentTimeMillis())
-          val out = fs.create(hwmPath, true)
+          // write-tmp + rename (as CommitLog.flush): a crash mid-write
+          // leaves the previous mark, never a truncated one
+          val tmp = hwmPath.suffix(".tmp")
+          val out = fs.create(tmp, true)
           try out.write(batchId.toString.getBytes("UTF-8")) finally out.close()
+          fs.delete(hwmPath, false)
+          if (!fs.rename(tmp, hwmPath))
+            throw new java.io.IOException(s"sink high-water mark swap failed: $hwmPath")
         }
         ()
       }

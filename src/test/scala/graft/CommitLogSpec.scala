@@ -158,6 +158,43 @@ class CommitLogSpec extends SparkSpec {
     assert(CommitLog.snapshot(spark, dir).count() == events.length + 10)
   }
 
+  test("sink high-water mark: swapped in via tmp + rename; a garbage mark fails naming its path") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    import graft.streaming.StreamingOps
+    import graft.streaming.StreamingOps.Ev
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    val dir = freshTable("sink_hwm")
+    val ck = graft.operators.Lake.scratch("commitlog/sink_hwm_ck")
+    fs.delete(new Path(ck), true)
+    val ev = Ev(1L, new java.sql.Timestamp(0L), 1L, "view", 1.0)
+    def marks(): Seq[Path] =
+      fs.listStatus(new Path(dir)).map(_.getPath).filter(_.getName.startsWith("_sink-")).toSeq
+    val stream = MemoryStream[Ev]
+    val q = StreamingOps.commitLogSink(stream.toDF(), dir, ck)
+    try {
+      stream.addData(Seq(ev)); q.processAllAvailable()
+      stream.addData(Seq(ev.copy(event_id = 2L))); q.processAllAvailable()
+      // a clean run leaves exactly the mark, holding the last batch id
+      val Seq(mark) = marks()
+      assert(mark.getName.endsWith("-hwm"), s"stray sink file: $mark")
+      val in = fs.open(mark)
+      try assert(new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8") == "1")
+      finally in.close()
+      // a torn (garbage) mark fails the next batch with its path
+      val out = fs.create(mark, true)
+      try out.write("".getBytes("UTF-8")) finally out.close()
+      stream.addData(Seq(ev.copy(event_id = 3L)))
+      val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        q.processAllAvailable()
+      }
+      val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+      assert(causes.exists(c => c.isInstanceOf[java.io.IOException] &&
+        c.getMessage.contains(mark.toUri.getPath)), s"no IOException naming $mark in: $causes")
+      assert(CommitLog.commits(fs, dir).length == 2, "a batch past a garbage mark committed")
+    } finally q.stop()
+  }
+
   test("vacuum removes only never-referenced staging dirs") {
     val dir = freshTable("vacuum")
     val r = Tables.region(spark, sfDir)

@@ -152,6 +152,16 @@ class NamespaceContractSpec extends SparkSpec {
     assert(!fs.exists(new Path(dir, "file/under")))
   }
 
+  test("a malformed quota file fails with an IOException naming the file") {
+    val dir = fresh("quota_malformed")
+    val quota = new Path(dir, "_quota")
+    Seq("", "ns=x", "ns").foreach { body =>
+      touch(quota, body)
+      val e = intercept[java.io.IOException](Namespace.readQuota(fs, dir))
+      assert(e.getMessage.contains(quota.toString), s"'$body': ${e.getMessage}")
+    }
+  }
+
   test("quota verbs carry the TestQuota contract: refusal-at-write, HADOOP-5872, clear resumes, file/absent targets refuse") {
     import graft.operators.Namespace._
     val aux = fresh("quota_verbs/aux")

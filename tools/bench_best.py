@@ -80,7 +80,7 @@ STALE_FLOORS = {
                  "(r13) and 4x15-bit chunk blocking (r14); current "
                  "shape is the general Manku scheme - C(6,3)=20 tables "
                  "on 30-bit three-piece keys (candidate count certified "
-                 "p=1.04, SCALE_r15_simhash.json) - 5x the explode rows "
+                 "p=1.04 in the round-15 scale fit) - 5x the explode rows "
                  "per doc, ~2^16 fewer random collisions",
     "lake_acl_enforce": "r16 rework: old floor measured the flat "
                         "per-entry class check; current ceremony is "

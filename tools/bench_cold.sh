@@ -48,23 +48,27 @@ echo "wrote docs/bench_cold.json"
 # Bench's outlier-remeasure arm replaces most cold first-pass times
 # with warm minima (the layouts exist by the rerun), so the per-op
 # PROVISIONING cost only survives in first_pass_vs_best. Second pass:
-# wipe again and run the Probe tool (reps=2) — rep1 carries each op's
-# cold cost (provisioning included), rep2 its steady state; the pair
-# is the per-op provisioning attribution the cold artifact exists for.
+# wipe again and run the scale tool's base pass (factor 1) over the
+# same ops: each op's cold run carries its provisioning, its steady
+# run the recurring cost; the pair is the per-op provisioning
+# attribution the cold artifact exists for.
 find "$SCRATCH" -mindepth 1 -maxdepth 1 ! -name 'scale*' -exec rm -rf {} +
-SPARK_GRAFT_PROBE_REPS=2 SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}" \
-  sbt -batch "runMain graft.tools.Probe ${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1} ${OPS//,/ }" 2>/dev/null \
-  | grep PROBE | sed 's/^\[info\] //' > /tmp/bench_cold_probe.txt
-python3 - <<'PYEOF'
-import json, re
-rows = {}
-for line in open("/tmp/bench_cold_probe.txt"):
-    m = re.match(r"PROBE (\S+)\s+([0-9.]+)\s+([0-9.]+)", line)
-    if m:
-        rows[m.group(1)] = {"cold": float(m.group(2)), "steady": float(m.group(3)),
-                            "provision": round(float(m.group(2)) - float(m.group(3)), 3)}
+PROBE_RAW=target/bench_cold_scale.json
+rm -f "$PROBE_RAW"
+SPARK_GRAFT_ONLY="$OPS" SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}" \
+  sbt -batch "runMain graft.tools.Scale ${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1} $PROBE_RAW 1" 2>/dev/null \
+  | grep '"scale":"done"'
+python3 - "$PROBE_RAW" <<'PYEOF'
+import json, sys
+d = json.load(open(sys.argv[1]))
+rows = {n: {"cold": o["base"][0], "steady": o["base"][1],
+            "provision": round(o["base"][0] - o["base"][1], 3)}
+        for n, o in d["ops"].items()}
 json.dump({"note": "per-op cold (first touch after scratch wipe, provisioning "
-                   "included) vs steady seconds; Probe reps=2, count() action",
+                   "included) vs steady seconds; graft.tools.Scale base pass "
+                   "(factor 1), count() action, local[%s]" % d["cpus"],
+           "cold_total": round(sum(r["cold"] for r in rows.values()), 2),
+           "steady_total": round(sum(r["steady"] for r in rows.values()), 2),
            "ops": rows}, open("docs/bench_cold_probe.json", "w"), indent=1)
 print("wrote docs/bench_cold_probe.json", len(rows), "ops")
 PYEOF

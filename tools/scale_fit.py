@@ -1,5 +1,5 @@
 #!/usr/bin/env python3
-"""Three-point power-law fit over ScaleStress measurements (VERDICT
+"""Three-point power-law fit over graft.tools.Scale records (VERDICT
 r13 #2): every 100x ratio so far is a single two-point comparison,
 which cannot separate fixed-latency-plus-linear from mildly
 super-linear. With walls at 1x, 10x and 30x we fit
@@ -11,10 +11,14 @@ by solving for p from the latency-free ratio
 via bisection (monotone in p), then a and b follow. p <= ~1.1 means
 linear-with-latency; p materially above 1 flags a rewrite.
 
-Usage: python3 tools/scale_fit.py docs/SCALE_r14_10x.json \
-           docs/SCALE_r14_30x.json [docs/SCALE_r14_fit.json]
+Each record holds per-op [cold, steady] seconds for its base and
+scaled pass; the fit uses the steady (recurring) runs.
+
+Usage: python3 tools/scale_fit.py scale_10x.json scale_30x.json \
+           [fit.json, default target/scale_fit.json]
 """
 import json
+import os
 import sys
 
 
@@ -36,18 +40,19 @@ def solve_p(r, f1, f2):
 
 def main():
     f10, f30 = sys.argv[1], sys.argv[2]
-    out = sys.argv[3] if len(sys.argv) > 3 else "docs/SCALE_r14_fit.json"
+    out = sys.argv[3] if len(sys.argv) > 3 else "target/scale_fit.json"
     d10 = json.load(open(f10))
     d30 = json.load(open(f30))
     assert d10["factor"] == 10 and d30["factor"] == 30
-    ops10 = {**d10.get("data_ops", {}), **d10.get("meta_ops", {})}
-    ops30 = {**d30.get("data_ops", {}), **d30.get("meta_ops", {})}
+    ops10, ops30 = d10["ops"], d30["ops"]
     rows = {}
-    for name in sorted(set(ops10) & set(ops30)):
-        # base walls measured twice in each run; min across both runs
-        t1 = min(min(ops10[name]["t_base"]), min(ops30[name]["t_base"]))
-        t10 = min(ops10[name]["t_scaled"])
-        t30 = min(ops30[name]["t_scaled"])
+    for name in sorted(n for n in set(ops10) & set(ops30)
+                       if all("base" in o and "scaled" in o
+                              for o in (ops10[n], ops30[n]))):
+        # steady runs; the base is measured in both records, take the min
+        t1 = min(ops10[name]["base"][1], ops30[name]["base"][1])
+        t10 = ops10[name]["scaled"][1]
+        t30 = ops30[name]["scaled"][1]
         row = {"t_1x": t1, "t_10x": t10, "t_30x": t30,
                "ratio_10x": round(t10 / t1, 2), "ratio_30x": round(t30 / t1, 2)}
         if t30 > t10 > t1:
@@ -70,6 +75,7 @@ def main():
         rows[name] = row
     res = {"model": "t = a + b*n^p (n = scale factor)",
            "sources": [f10, f30], "ops": rows}
+    os.makedirs(os.path.dirname(out) or ".", exist_ok=True)
     json.dump(res, open(out, "w"), indent=1)
     for n, r in rows.items():
         print(f"{n:28s} p={r.get('p')} {r['verdict']} "
