@@ -28,9 +28,8 @@ object Bench {
     * must sit at depth 1 and be immediately followed by ':' and an
     * object; the extracted map size is asserted against the
     * artifact's own "n_queries" when present — any mismatch is a
-    * parse bug and yields NO floors rather than wrong ones. Shared
-    * with ScaleSuite's suite-ratio path (ADVICE r14: the retired
-    * fragile scan must not survive anywhere). */
+    * parse bug and yields NO floors rather than wrong ones. Bench's
+    * own floor, adopted-run and prior reads are its only callers. */
   def parseQueriesObject(path: String): Map[String, Double] =
     try {
       val txt = new String(java.nio.file.Files.readAllBytes(

@@ -55,14 +55,18 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * Reads reconstruct the active file set at any version (`snapshot`)
   * or wall-clock instant (`snapshotAsOf`) by replaying the log — pure
   * driver-side metadata ops (a NameNode replaying edits), after which
-  * the data read is an ordinary pruned parquet scan. HEAD reads
-  * (`snapshot` and `activeFiles` at their default version,
+  * the data read is an ordinary pruned parquet scan. Every journal
+  * read goes through one reader (`replay`): one `_log` listing, read
+  * newest-first down to the newest complete image at or below the
+  * version it needs, so state is that image plus the edits after it
+  * and the cost is bounded by the commits since that image, not by the
+  * history. Head and versioned `snapshot`/`activeFiles`,
   * `snapshotWithInflight`, the cadence's replay count,
-  * `saveNamespace`'s head check) list `_log`
-  * once and read it newest-first down to the first complete image, so
-  * their cost is bounded by the commits since that image, not by the
-  * history; versioned and as-of reads, and the ceremonies' journal
-  * reads, replay the full log. Every read goes
+  * `saveNamespace`'s head check, the retention cut, the images, `drain`
+  * and `restore` read that way; as-of reads, `ship`, vacuum, clone pins,
+  * `commits()` and the upgrade ceremonies (whose state lives in tags an
+  * image does not carry) read from the start. The ceremonies commit
+  * through one compare-and-swap (`cas`). Every data read goes
   * through one reader (`read`): when EVERY entry it reads carries the
   * same recorded schema, that schema is handed to Spark and resolving
   * the snapshot schedules no job (a NameNode never opens a block to
@@ -73,8 +77,8 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * would for any parquet read. Both give the same schema: when all
   * footers agree, inference over any of them returns the recorded one.
   * At 100 TB the
-  * log stays tiny (it scales with commits, not data), head replay is
-  * O(commits since the newest image), and no data file is ever
+  * log stays tiny (it scales with commits, not data), a bounded replay
+  * is O(commits since the image it starts at), and no data file is ever
   * rewritten in place: version reads are stable under concurrent
   * appends.
   */
@@ -100,151 +104,205 @@ object CommitLog {
   private def logFiles(fs: FileSystem, tableDir: String): Seq[FileStatus] = {
     val dir = logDir(tableDir)
     if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq.filter(_.getPath.getName.endsWith(".log"))
-      .sortBy(_.getPath.getName)
+    else fs.listStatus(dir).toSeq.filter(_.getPath.getName.endsWith(".log")).sortBy(versionOf)
   }
 
   private def versionOf(st: FileStatus): Int = st.getPath.getName.stripSuffix(".log").toInt
+
+  /** The version a commit claims after `listing`: past every version
+    * file in it, committed or burned. */
+  private def nextVersion(listing: Seq[FileStatus]): Int =
+    listing.lastOption.map(versionOf(_) + 1).getOrElse(0)
+
+  /** The one record format of the table's small files (log files,
+    * links, flush and safe-mode markers): one entry per line, closed by
+    * `end`. */
+  private def record(lines: Seq[String]): Array[Byte] =
+    (lines :+ "end").mkString("", "\n", "\n").getBytes("UTF-8")
+
+  /** A record read back: its entry lines when it closes with `end`,
+    * None when it is torn (its writer died mid-write) or gone (a tmp
+    * renamed away mid-listing) — a torn record never surfaces half its
+    * entries. */
+  private def readRecord(fs: FileSystem, f: Path): Option[Seq[String]] = {
+    val text =
+      try {
+        val in = fs.open(f)
+        try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
+        finally in.close()
+      } catch { case _: java.io.FileNotFoundException => "" }
+    val lines = text.linesIterator.map(_.trim).filter(_.nonEmpty).toSeq
+    if (lines.lastOption.contains("end")) Some(lines.init) else None
+  }
+
+  /** The values of a record's `<key> <value>` entries, in order. */
+  private def field(lines: Seq[String], key: String): Seq[String] =
+    lines.collect { case l if l.startsWith(key + " ") => l.drop(key.length + 1) }
+
+  /** Write a record by CREATING `f` exclusively — the atomic claim of
+    * log and link files. False ONLY when the file already exists
+    * (another writer won it); any other IO failure propagates. A write
+    * failing after the create leaves the file without `end`: torn, so
+    * readers skip it rather than read half of it. */
+  private def createRecord(fs: FileSystem, f: Path, lines: Seq[String]): Boolean = {
+    val out =
+      try fs.create(f, false)
+      catch {
+        case _: org.apache.hadoop.fs.FileAlreadyExistsException => return false
+        case _: java.io.IOException if fs.exists(f) => return false // lost the race
+      }
+    try { out.write(record(lines)); out.close() }
+    catch { case e: java.io.IOException =>
+      try out.close() catch { case _: java.io.IOException => () }
+      throw e
+    }
+    true
+  }
 
   /** One log file parsed. A log file without the terminal `end` marker
     * is a commit that died mid-write: its version number is burned but
     * it carries NO actions — the unclosed-edit-log-segment rule, so a
     * torn write can never surface as a half-applied commit. */
-  private def readCommit(fs: FileSystem, st: FileStatus): Option[Commit] = {
-    val in = fs.open(st.getPath)
-    val text =
-      try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
-      finally in.close()
-    val lines = text.linesIterator.map(_.trim).filter(_.nonEmpty).toSeq
-    if (!lines.lastOption.contains("end")) None
-    else {
-      val ts = lines.collectFirst { case l if l.startsWith("ts ") => l.drop(3).toLong }
-        .getOrElse(0L)
-      Some(Commit(
-        versionOf(st), ts,
-        lines.collect { case l if l.startsWith("add ") => l.drop(4) },
-        lines.collect { case l if l.startsWith("remove ") => l.drop(7) },
-        isCheckpoint = lines.contains("ckpt"),
-        tags = lines.collect { case l if l.startsWith("tag ") => l.drop(4) }.toSet,
-        schema = lines.collectFirst { case l if l.startsWith("schema ") => l.drop(7) }))
+  private def readCommit(fs: FileSystem, st: FileStatus): Option[Commit] =
+    readRecord(fs, st.getPath).map { lines =>
+      Commit(versionOf(st), field(lines, "ts").headOption.map(_.toLong).getOrElse(0L),
+        field(lines, "add"), field(lines, "remove"), isCheckpoint = lines.contains("ckpt"),
+        tags = field(lines, "tag").toSet, schema = field(lines, "schema").headOption)
     }
-  }
 
-  /** All committed versions in order (driver-side metadata read);
-    * burned versions (see `readCommit`) are skipped. */
-  def commits(fs: FileSystem, tableDir: String): Seq[Commit] =
-    logFiles(fs, tableDir).flatMap(readCommit(fs, _))
-
-  /** The HEAD replay: the newest complete image commit and every
-    * complete commit after it, in order — all a head read needs,
-    * because an image's adds are the full active set after it. One
-    * listing, then log files newest-first until the first image, so a
-    * head resolve opens (commits since the image + 1) files whatever
-    * the history's length; with no image it is the full log. */
-  private def headCommits(fs: FileSystem, tableDir: String): Seq[Commit] = {
-    val newestFirst = logFiles(fs, tableDir).reverseIterator.flatMap(readCommit(fs, _))
+  /** THE journal reader — the reference's durability rule (FSImage.java:1:
+    * state is the newest image plus the edits after it). It reads the
+    * version files of one `_log` listing newest-first down to the
+    * newest complete image at or below `upTo`, and returns that image
+    * and every complete commit after it in the listing, oldest first;
+    * with no such image (or `upTo` < 0) it reads to the start. An
+    * image's adds are the full active set after it, so what it returns
+    * replays to the same state as the full log. A head read opens
+    * (commits since the newest image + 1) files whatever the history's
+    * length; a read at version v passes the listing cut at v; `restore`
+    * passes its target over the whole listing. Burned versions (see
+    * `readCommit`) are skipped. */
+  private def replay(fs: FileSystem, listing: Seq[FileStatus], upTo: Int): Seq[Commit] = {
+    val newestFirst = listing.reverseIterator.flatMap(readCommit(fs, _))
     var oldestFirst = List.empty[Commit]
     var atImage = false
     while (!atImage && newestFirst.hasNext) {
       val c = newestFirst.next()
       oldestFirst = c :: oldestFirst
-      atImage = c.isCheckpoint
+      atImage = c.isCheckpoint && c.version <= upTo
     }
     oldestFirst
   }
 
-  /** The commits a read at `version` replays: the head (the default,
-    * `Int.MaxValue`) from its newest image, any other version the full
-    * log through it. */
-  private def replayTo(fs: FileSystem, tableDir: String, version: Int): Seq[Commit] =
-    if (version == Int.MaxValue) headCommits(fs, tableDir)
-    else commits(fs, tableDir).filter(_.version <= version)
+  /** All committed versions in order (driver-side metadata read);
+    * burned versions (see `readCommit`) are skipped. */
+  def commits(fs: FileSystem, tableDir: String): Seq[Commit] =
+    replay(fs, logFiles(fs, tableDir), upTo = -1)
 
-  /** Highest version number present in the log dir, committed or
-    * burned — the next attempt must go past both. */
-  private def maxVersionOnDisk(fs: FileSystem, tableDir: String): Option[Int] =
-    logFiles(fs, tableDir).map(versionOf).maxOption
+  /** The active entries at `version` (Int.MaxValue: the head),
+    * replayed from the newest image at or below it. */
+  private def entriesAt(fs: FileSystem, tableDir: String,
+                        version: Int): Seq[(String, Option[String])] =
+    activeEntries(replay(fs, logFiles(fs, tableDir).takeWhile(versionOf(_) <= version), version))
 
-  /** Journal read STABLE against in-flight writers. tryCommit's
-    * create-then-write leaves a sub-millisecond window where a
-    * version FILE exists but its body is not yet terminated;
-    * `commits()` correctly skips it (the burned-version rule for
-    * crashed writers), but a diff-then-CAS ceremony reading the
-    * journal inside that window would claim `next` ABOVE the
-    * in-flight version while computing its set difference WITHOUT it
-    * — the CAS succeeds and the in-flight commit's adds silently
-    * reappear (caught by the restore/append race spec: a restore
-    * that never saw the racing append's v2 landed at v3 and left the
-    * appended file active). The fix waits only on versions whose
-    * file is PRESENT but unparseable: a live writer terminates in
-    * milliseconds; a crashed writer never does and, past the grace
-    * bound, stays a burned version exactly as before. Vacuumed
-    * history (no file at all) never waits.
+  /** Versions diagnosed burned by the CAS's in-flight wait, keyed
+    * `tableDir#version`, at the (length, mtime) identity their file had
+    * (a permanently burned file would otherwise re-pay the full grace
+    * wait on EVERY ceremony forever — each checkpoint/restore/drain on
+    * that table stalling 2s). A crashed writer's file never changes,
+    * so the diagnosis holds; a NEW in-flight file reusing the version
+    * number after a dir wipe presents a different identity and gets the
+    * full grace wait again — the race guarantee is preserved.
     *
-    * Versions once diagnosed burned are remembered (ADVICE r11: a
-    * permanently burned file otherwise re-pays the full grace wait on
-    * EVERY journal read forever — each checkpoint/restore/drain on
-    * that table stalling 2s). The diagnosis is keyed on the file's
-    * (length, mtime) identity: a crashed writer's file never changes,
-    * so the cache holds; a NEW in-flight file reusing the version
-    * number after a dir wipe presents a different identity and gets
-    * the full grace wait again — the race guarantee is preserved.
-    *
-    * Two hardening rules (ADVICE r11 follow-up): (1) EVICTION — a
-    * diagnosis whose log file is GONE from disk (dir wiped, history
-    * vacuumed, table recreated) is dropped at the next journal read,
-    * so the map cannot grow past the live burned files and a
-    * same-version successor always starts from a clean slate;
-    * (2) the (length, mtime) identity is only as sharp as the
-    * filesystem's mtime granularity (1s on some FSs) — eviction
-    * closes the delete-then-recreate alias (the file vanishes between
-    * reads), and within a single uninterrupted existence a log file
-    * is create-exclusive and append-only, so same-length-same-mtime
+    * Two hardening rules: (1) EVICTION — a diagnosis whose log file is
+    * GONE from the listing (dir wiped, history vacuumed, table
+    * recreated) is dropped at the next CAS, so the map cannot grow past
+    * the live burned files and a same-version successor always starts
+    * from a clean slate; (2) the (length, mtime) identity is only as
+    * sharp as the filesystem's mtime granularity (1s on some FSs) —
+    * eviction closes the delete-then-recreate alias (the file vanishes
+    * between reads), and within a single uninterrupted existence a log
+    * file is create-exclusive and append-only, so same-length-same-mtime
     * genuinely is the same unchanged burned file. */
   private val burnedDiagnosed =
     new java.util.concurrent.ConcurrentHashMap[String, (Long, Long)]()
 
-  private def stableCommits(fs: FileSystem, tableDir: String): Seq[Commit] = {
-    def allOnDisk(): Seq[(Int, Long, Long)] =
-      logFiles(fs, tableDir).map(st => (versionOf(st), st.getLen, st.getModificationTime))
-    def unknown(listing: Seq[(Int, Long, Long)],
-                known: Set[Int]): Seq[(Int, Long, Long)] =
-      listing.filter { case (v, _, _) => !known.contains(v) }
-    def waitable(xs: Seq[(Int, Long, Long)]): Seq[(Int, Long, Long)] =
-      xs.filter { case (v, len, mt) =>
-        burnedDiagnosed.get(s"$tableDir#$v") != ((len, mt))
-      }
-    var cs = commits(fs, tableDir)
-    // ONE listing serves both the eviction sweep and the first pending
-    // check (self-review r12: a second listStatus per journal read is
-    // pure metadata-latency waste on object-store-like filesystems).
-    // Taken AFTER the journal read: the race guard needs any version
-    // file that appears after `cs` was read to show up here as pending.
-    val firstListing = allOnDisk()
-    // evict stale diagnoses: version file gone = diagnosis void
-    locally {
-      val live = firstListing.map(_._1).toSet
-      val prefix = s"$tableDir#"
-      // non-numeric suffix = a DIFFERENT tableDir extending this
-      // prefix ("a/b#2" vs "a/b") — never evict those here
-      burnedDiagnosed.keySet.removeIf { k =>
-        k.startsWith(prefix) &&
-          k.stripPrefix(prefix).toIntOption.exists(v => !live.contains(v))
-      }
+  /** A ceremony's planned commit at the claimed version: its actions,
+    * and the dir it staged for them (deleted when the swap loses). */
+  private final case class Swap(adds: Seq[String], removes: Seq[String],
+                                image: Boolean = false, tags: Seq[String] = Nil,
+                                schema: Option[String] = None, staged: Option[String] = None)
+
+  /** THE compare-and-swap of the journal ceremonies (both image forms,
+    * `drain`, `restore` and the upgrade trio), named `verb` in its
+    * errors. In order:
+    *  1. a frozen table is refused before any I/O (safe mode);
+    *  2. one `_log` listing claims `next` = its max + 1, BEFORE the state
+    *     the swap is computed from is read: any commit landing later
+    *     occupies >= next, so the swap below loses instead of acting on
+    *     a stale snapshot;
+    *  3. the replay the ceremony needs is read from that same listing
+    *     (`replay` at `upTo`: Int.MaxValue for the head, -1 for the full
+    *     log);
+    *  4. IN-FLIGHT WAIT. tryCommit's create-then-write leaves a window
+    *     where a version file exists but its body is not yet terminated;
+    *     the replay correctly skips it (the burned-version rule for
+    *     crashed writers), but a set difference computed without it
+    *     would land at `next` ABOVE it and silently resurrect whatever
+    *     it removed or drop what it added (caught by the restore/append
+    *     race spec: a restore that never saw the racing append's v2
+    *     landed at v3 and left the appended file active). So while a
+    *     file of the listing inside the replayed range exists but does
+    *     not parse, the replay is re-read every 20 ms: a live writer
+    *     terminates in milliseconds; a crashed writer never does and,
+    *     past the 2 s grace, stays a burned version, remembered in
+    *     `burnedDiagnosed` so the wait is paid once. Vacuumed history
+    *     (no file at all) never waits;
+    *  5. `plan` computes the swap from the replay (and `next`), and may
+    *     stage data for it;
+    *  6. tryCommit at exactly `next`. Not a blind retry: the swap
+    *     reflects the replay above, so committing it higher would
+    *     resurrect whatever a winner removed. Losing deletes the staged
+    *     dir and throws, and the caller redoes the ceremony.
+    * Returns the committed commit. */
+  private def cas(fs: FileSystem, tableDir: String, verb: String, upTo: Int, ts: Long)
+                 (plan: (Int, Seq[Commit]) => Swap): Commit = {
+    refuseFrozen(fs, tableDir, verb)
+    val listing = logFiles(fs, tableDir)
+    val next = nextVersion(listing)
+    val prefix = s"$tableDir#"
+    val live = listing.map(versionOf).toSet
+    // non-numeric suffix = a DIFFERENT tableDir extending this prefix
+    // ("a/b#2" vs "a/b") — never evict those here
+    burnedDiagnosed.keySet.removeIf { k =>
+      k.startsWith(prefix) && k.stripPrefix(prefix).toIntOption.exists(v => !live(v))
     }
-    var pending = waitable(unknown(firstListing, cs.map(_.version).toSet))
+    def replayed(): (Seq[Commit], Seq[FileStatus]) = {
+      val cs = replay(fs, listing, upTo)
+      val from = cs.headOption.filter(c => c.isCheckpoint && c.version <= upTo)
+        .fold(Int.MinValue)(_.version)
+      val parsed = cs.map(_.version).toSet
+      (cs, listing.filter { st =>
+        val v = versionOf(st)
+        v > from && !parsed(v) &&
+          burnedDiagnosed.get(prefix + v) != ((st.getLen, st.getModificationTime))
+      })
+    }
+    var (cs, pending) = replayed()
     var waitedMs = 0L
     while (waitedMs < 2000L && pending.nonEmpty) {
       Thread.sleep(20L); waitedMs += 20L
-      cs = commits(fs, tableDir)
-      pending = waitable(unknown(allOnDisk(), cs.map(_.version).toSet))
+      val (reread, still) = replayed()
+      cs = reread; pending = still
     }
-    // grace expired with versions still unparseable: burned — record
-    // each at its observed identity so the wait is paid at most once
-    pending.foreach { case (v, len, mt) =>
-      burnedDiagnosed.put(s"$tableDir#$v", (len, mt))
+    pending.foreach(st => burnedDiagnosed.put(prefix + versionOf(st), (st.getLen, st.getModificationTime)))
+    val s = plan(next, cs)
+    if (!tryCommit(fs, tableDir, next, ts, s.adds, s.removes, s.image, s.tags, s.schema)) {
+      s.staged.foreach(p => fs.delete(new Path(tableDir, p), true))
+      throw new java.util.ConcurrentModificationException(
+        s"$tableDir advanced past version $next during $verb — retry")
     }
-    cs
+    Commit(next, ts, s.adds, s.removes, s.image, s.tags.toSet, s.schema)
   }
 
   /** Attempt to commit exactly version `v` (create-exclusive). Returns
@@ -255,29 +313,11 @@ object CommitLog {
                 adds: Seq[String], removes: Seq[String],
                 checkpointMarker: Boolean = false,
                 tags: Seq[String] = Nil, schema: Option[String] = None): Boolean = {
-    if (isFrozen(fs, tableDir))
-      throw new java.io.IOException(
-        s"$tableDir is frozen (safe mode): mutations refused, reads unaffected")
+    refuseFrozen(fs, tableDir, "commit")
     fs.mkdirs(logDir(tableDir))
-    val f = logFile(tableDir, v)
-    val marker = (if (checkpointMarker) Seq("ckpt") else Seq.empty) ++ tags.map("tag " + _) ++
-      schema.map("schema " + _)
-    val body = (s"ts $ts" +: marker ++: (adds.map("add " + _) ++ removes.map("remove " + _)) :+ "end")
-      .mkString("", "\n", "\n")
-    val out =
-      try fs.create(f, false)
-      catch {
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException => return false
-        case _: java.io.IOException if fs.exists(f) => return false // lost the race
-      }
-    try { out.write(body.getBytes("UTF-8")); out.close() }
-    catch { case e: java.io.IOException =>
-      // we own this version number; leave the terminator-less file as
-      // a burned version rather than a parseable half-commit
-      try out.close() catch { case _: java.io.IOException => () }
-      throw e
-    }
-    true
+    createRecord(fs, logFile(tableDir, v),
+      Seq(s"ts $ts") ++ (if (checkpointMarker) Seq("ckpt") else Nil) ++ tags.map("tag " + _) ++
+        schema.map("schema " + _) ++ adds.map("add " + _) ++ removes.map("remove " + _))
   }
 
   /** Commit at the next available version, retrying under contention,
@@ -288,12 +328,18 @@ object CommitLog {
              checkpointMarker: Boolean = false,
              tags: Seq[String] = Nil): Int = {
     val schema = addsSchema(fs, tableDir, adds)
-    var v = maxVersionOnDisk(fs, tableDir).map(_ + 1).getOrElse(0)
+    var v = nextVersion(logFiles(fs, tableDir))
     while (!tryCommit(fs, tableDir, v, ts, adds, removes, checkpointMarker, tags, schema)) v += 1
     v
   }
 
   private def frozenMarker(tableDir: String) = new Path(tableDir, "_frozen")
+
+  /** Refuse a mutation of a frozen table before any journal or data I/O. */
+  private def refuseFrozen(fs: FileSystem, tableDir: String, verb: String): Unit =
+    if (isFrozen(fs, tableDir))
+      throw new java.io.IOException(
+        s"$tableDir is frozen (safe mode): $verb refused before any I/O, reads unaffected")
 
   /** SAFE MODE for a versioned table — the reference's
     * ClientProtocol.setSafeMode (protocol/ClientProtocol.java:648)
@@ -355,32 +401,25 @@ object CommitLog {
     fs.exists(frozenMarker(tableDir))
 
   /** Current safe-mode state, None when the table is writable. A
-    * marker whose content predates the threshold machine (or was
-    * hand-placed) parses as MANUAL — the conservative reading: it
-    * never self-exits. */
+    * marker that is not a complete record — hand-placed, predating the
+    * threshold machine, or torn mid-rewrite — parses as MANUAL with
+    * nothing verified: the conservative reading, it never self-exits. */
   def safeMode(fs: FileSystem, tableDir: String): Option[SafeModeState] = {
     val f = frozenMarker(tableDir)
-    if (!fs.exists(f)) return None
-    val in = fs.open(f)
-    val text =
-      try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
-      finally in.close()
-    val lines = text.linesIterator.map(_.trim).filter(_.nonEmpty).toSeq
-    val pm = lines.collectFirst { case l if l.startsWith("startup ") =>
-      l.drop(8).toInt }
-    Some(SafeModeState(
-      manual = pm.isEmpty,
-      thresholdPm = pm.getOrElse(0),
-      verified = lines.collect { case l if l.startsWith("safe ") => l.drop(5) }.toSet))
+    if (!fs.exists(f)) None
+    else {
+      val lines = readRecord(fs, f).getOrElse(Nil)
+      val pm = field(lines, "startup").headOption.map(_.toInt)
+      Some(SafeModeState(manual = pm.isEmpty, thresholdPm = pm.getOrElse(0),
+        verified = field(lines, "safe").toSet))
+    }
   }
 
   private def writeSafeMode(fs: FileSystem, tableDir: String,
                             st: SafeModeState): Unit = {
     val head = if (st.manual) "manual" else s"startup ${st.thresholdPm}"
-    val body = (head +: st.verified.toSeq.sorted.map("safe " + _))
-      .mkString("", "\n", "\n")
     val out = fs.create(frozenMarker(tableDir), true)
-    try out.write(body.getBytes("UTF-8")) finally out.close()
+    try out.write(record(head +: st.verified.toSeq.sorted.map("safe " + _))) finally out.close()
   }
 
   /** One verification report: (verified so far, active total, still
@@ -458,9 +497,7 @@ object CommitLog {
   def writeCommit(spark: SparkSession, tableDir: String, df: DataFrame,
                   relPath: String, ts: Long): Int = {
     val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    if (isFrozen(fs, tableDir))
-      throw new java.io.IOException(
-        s"$tableDir is frozen (safe mode): write refused before any data I/O")
+    refuseFrozen(fs, tableDir, "write")
     df.write.mode("overwrite").parquet(s"$tableDir/$relPath")
     commit(fs, tableDir, ts, adds = Seq(relPath), removes = Seq.empty)
   }
@@ -582,7 +619,7 @@ object CommitLog {
     * wrong. Every consumer of "what files is the table at version N"
     * must come through here (or snapshot), never reimplement replay. */
   def activeFiles(fs: FileSystem, tableDir: String, version: Int = Int.MaxValue): Seq[String] =
-    activeSet(replayTo(fs, tableDir, version))
+    entriesAt(fs, tableDir, version).map(_._1)
 
   /** Active (relative) file set after replaying the log through the
     * given versions. */
@@ -613,7 +650,7 @@ object CommitLog {
   /** Read the table as of a version (default: latest). */
   def snapshot(spark: SparkSession, tableDir: String, version: Int = Int.MaxValue): DataFrame = {
     val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    val entries = activeEntries(replayTo(fs, tableDir, version))
+    val entries = entriesAt(fs, tableDir, version)
     require(entries.nonEmpty, s"no active files in $tableDir at version $version")
     read(spark, tableDir, entries)
   }
@@ -652,38 +689,20 @@ object CommitLog {
   private def commitImage(spark: SparkSession, tableDir: String, ts: Long,
                           materialize: Boolean): Int = {
     val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    if (isFrozen(fs, tableDir))
-      throw new java.io.IOException(
-        s"$tableDir is frozen (safe mode): checkpoint refused before any data I/O")
-    // CAS ordering: claim the next version number BEFORE reading the
-    // state it will swap — any commit that lands after this read
-    // occupies >= next, so tryCommit loses the create-exclusive race
-    // and the ceremony aborts instead of acting on a stale snapshot.
-    val next = maxVersionOnDisk(fs, tableDir).map(_ + 1).getOrElse(0)
-    val entries = activeEntries(stableCommits(fs, tableDir))
-    val active = entries.map(_._1)
-    require(active.nonEmpty, s"nothing to checkpoint in $tableDir")
-    val image = s"data/ckpt-$next"
-    val (adds, removes, schema) =
+    cas(fs, tableDir, "checkpoint", Int.MaxValue, ts) { (next, cs) =>
+      val entries = activeEntries(cs)
+      val active = entries.map(_._1)
+      require(active.nonEmpty, s"nothing to checkpoint in $tableDir")
       if (materialize) {
+        val image = s"data/ckpt-$next"
         read(spark, tableDir, entries).write.mode("overwrite").parquet(s"$tableDir/$image")
-        (Seq(image), active, addsSchema(fs, tableDir, Seq(image)))
-      } else (active, Nil, entries.map(_._2).distinct match {
+        Swap(Seq(image), active, image = true, schema = addsSchema(fs, tableDir, Seq(image)),
+          staged = Some(image))
+      } else Swap(active, Nil, image = true, schema = entries.map(_._2).distinct match {
         case Seq(uniform) => uniform
         case _ => None
       })
-    // Compare-and-swap, not blind retry: the image reflects the active
-    // set AS OF the journal read above, so it may only commit at the exact next
-    // version. If a concurrent writer got there first, retrying at a
-    // higher version would resurrect whatever that writer removed —
-    // delete a stale data image and make the caller redo the checkpoint.
-    if (!tryCommit(fs, tableDir, next, ts, adds, removes, checkpointMarker = true,
-        schema = schema)) {
-      if (materialize) fs.delete(new Path(tableDir, image), true)
-      throw new java.util.ConcurrentModificationException(
-        s"$tableDir advanced past version $next during checkpoint — retry")
-    }
-    next
+    }.version
   }
 
   /** CHECKPOINT CADENCE — the reference's automatic image policy
@@ -700,8 +719,8 @@ object CommitLog {
   def maybeCheckpoint(spark: SparkSession, tableDir: String, ts: Long,
                       maxReplay: Int): Option[Int] = {
     val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    val replay = headCommits(fs, tableDir).count(!_.isCheckpoint)
-    if (replay > maxReplay) Some(commitImage(spark, tableDir, ts, materialize = false))
+    val edits = replay(fs, logFiles(fs, tableDir), Int.MaxValue).count(!_.isCheckpoint)
+    if (edits > maxReplay) Some(commitImage(spark, tableDir, ts, materialize = false))
     else None
   }
 
@@ -719,7 +738,7 @@ object CommitLog {
     * successful save, replay-from-image is 0 commits. */
   def saveNamespace(spark: SparkSession, tableDir: String, ts: Long): Option[Int] = {
     val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    if (headCommits(fs, tableDir).lastOption.exists(_.isCheckpoint)) None
+    if (replay(fs, logFiles(fs, tableDir), Int.MaxValue).lastOption.exists(_.isCheckpoint)) None
     else Some(commitImage(spark, tableDir, ts, materialize = false))
   }
 
@@ -767,15 +786,13 @@ object CommitLog {
     * version numbers. */
   def dropHistoryBefore(fs: FileSystem, tableDir: String, v: Int,
                         graceMs: Long = 3600000L): Seq[Int] = {
-    if (isFrozen(fs, tableDir))
-      throw new java.io.IOException(
-        s"$tableDir is frozen (safe mode): history deletion refused")
-    val cs = commits(fs, tableDir)
-    val cut = cs.filter(c => c.isCheckpoint && c.version <= v).lastOption
+    refuseFrozen(fs, tableDir, "history deletion")
+    val listing = logFiles(fs, tableDir)
+    val cut = replay(fs, listing.takeWhile(versionOf(_) <= v), v).headOption.filter(_.isCheckpoint)
       .getOrElse(throw new IllegalArgumentException(
         s"no checkpoint at or before version $v in $tableDir — checkpoint() first"))
     // delete every log file below the cut, committed or burned
-    val dropped = logFiles(fs, tableDir).map(versionOf).filter(_ < cut.version)
+    val dropped = listing.map(versionOf).takeWhile(_ < cut.version)
     dropped.foreach(d => fs.delete(logFile(tableDir, d), false))
     vacuumOrphans(fs, tableDir, graceMs)
     dropped
@@ -875,7 +892,8 @@ object CommitLog {
   /** Begin a layout upgrade: write `df` as the new layout and swap it
     * for the entire current active set in one tagged commit. Refused
     * while another upgrade is pending (the reference's one-upgrade-at-
-    * a-time rule). Compare-and-swap like checkpoint(): the swap is
+    * a-time rule). Commits through `cas` over the full log (the
+    * upgrade state lives in tags an image does not carry): the swap is
     * computed against the active set as of planning, so it may only
     * land at the exact next version — a concurrent commit aborts the
     * ceremony rather than silently resurrecting removed files.
@@ -883,24 +901,14 @@ object CommitLog {
   def startUpgrade(spark: SparkSession, tableDir: String, df: DataFrame,
                    relPath: String, ts: Long): Int = {
     val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    // CAS ordering: claim the next version BEFORE reading the state
-    // the swap is computed from — a commit landing after this read
-    // occupies >= next, so tryCommit loses and the ceremony aborts
-    // (it can never act on a stale active set).
-    val next = maxVersionOnDisk(fs, tableDir).map(_ + 1).getOrElse(0)
-    val cs = stableCommits(fs, tableDir)
-    if (pendingUpgradeIn(cs).isDefined)
-      throw new IllegalStateException(
-        s"$tableDir has a pending upgrade: rollback or finalize it first")
-    val old = activeSet(cs)
-    df.write.mode("overwrite").parquet(s"$tableDir/$relPath")
-    if (!tryCommit(fs, tableDir, next, ts, adds = Seq(relPath), removes = old,
-        tags = Seq("upgrade"))) {
-      fs.delete(new Path(tableDir, relPath), true)
-      throw new java.util.ConcurrentModificationException(
-        s"$tableDir advanced past version $next during upgrade — retry")
-    }
-    next
+    cas(fs, tableDir, "upgrade", -1, ts) { (_, cs) =>
+      if (pendingUpgradeIn(cs).isDefined)
+        throw new IllegalStateException(
+          s"$tableDir has a pending upgrade: rollback or finalize it first")
+      val old = activeSet(cs)
+      df.write.mode("overwrite").parquet(s"$tableDir/$relPath")
+      Swap(Seq(relPath), old, tags = Seq("upgrade"), staged = Some(relPath))
+    }.version
   }
 
   /** Roll back the pending upgrade: one inverse commit (re-add what
@@ -908,30 +916,22 @@ object CommitLog {
     * The upgrade's files stay on disk for history reads until
     * retention drops them — rollback is a metadata flip, O(1) in data
     * size. CAS-pinned against the ceremony state it inspected. */
-  def rollbackUpgrade(fs: FileSystem, tableDir: String, ts: Long): Int = {
-    val next = maxVersionOnDisk(fs, tableDir).map(_ + 1).getOrElse(0)
-    val up = pendingUpgradeIn(stableCommits(fs, tableDir)).getOrElse(
-      throw new IllegalStateException(s"$tableDir: no pending upgrade to roll back"))
-    if (!tryCommit(fs, tableDir, next, ts, adds = up.removes, removes = up.adds,
-        tags = Seq("rollback")))
-      throw new java.util.ConcurrentModificationException(
-        s"$tableDir advanced past version $next during rollback — retry")
-    next
-  }
+  def rollbackUpgrade(fs: FileSystem, tableDir: String, ts: Long): Int =
+    cas(fs, tableDir, "rollback", -1, ts) { (_, cs) =>
+      val up = pendingUpgradeIn(cs).getOrElse(
+        throw new IllegalStateException(s"$tableDir: no pending upgrade to roll back"))
+      Swap(up.removes, up.adds, tags = Seq("rollback"))
+    }.version
 
   /** Finalize the pending upgrade: close the rollback window with an
     * empty tagged commit. Afterwards rollbackUpgrade refuses and the
     * pre-upgrade layout becomes retention-reclaimable. */
-  def finalizeUpgrade(fs: FileSystem, tableDir: String, ts: Long): Int = {
-    val next = maxVersionOnDisk(fs, tableDir).map(_ + 1).getOrElse(0)
-    pendingUpgradeIn(stableCommits(fs, tableDir)).getOrElse(
-      throw new IllegalStateException(s"$tableDir: no pending upgrade to finalize"))
-    if (!tryCommit(fs, tableDir, next, ts, adds = Nil, removes = Nil,
-        tags = Seq("finalize")))
-      throw new java.util.ConcurrentModificationException(
-        s"$tableDir advanced past version $next during finalize — retry")
-    next
-  }
+  def finalizeUpgrade(fs: FileSystem, tableDir: String, ts: Long): Int =
+    cas(fs, tableDir, "finalize", -1, ts) { (_, cs) =>
+      pendingUpgradeIn(cs).getOrElse(
+        throw new IllegalStateException(s"$tableDir: no pending upgrade to finalize"))
+      Swap(Nil, Nil, tags = Seq("finalize"))
+    }.version
 
   // ------------------------------------------------------------------
   // Symlink / view layer (reference protocol/ClientProtocol.java:839
@@ -963,17 +963,8 @@ object CommitLog {
     fs.mkdirs(f.getParent)
     // reclaim a torn claim: present on disk but unreadable as a link
     if (fs.exists(f) && linkTarget(fs, root, name).isEmpty) fs.delete(f, false)
-    val out =
-      try fs.create(f, false)
-      catch {
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException =>
-          throw new java.io.IOException(s"link exists: $name")
-        case e: java.io.IOException if fs.exists(f) =>
-          throw new java.io.IOException(s"link exists: $name", e)
-      }
-    val body = (s"target $target" +: version.map(v => s"version $v").toSeq :+ "end")
-      .mkString("", "\n", "\n")
-    try out.write(body.getBytes("UTF-8")) finally out.close()
+    if (!createRecord(fs, f, s"target $target" +: version.map(v => s"version $v").toSeq))
+      throw new java.io.IOException(s"link exists: $name")
   }
 
   def removeLink(fs: FileSystem, root: String, name: String): Boolean =
@@ -982,19 +973,11 @@ object CommitLog {
   /** The raw (unresolved) target of a link — getLinkTarget. A file
     * without the terminal `end` marker is a torn create: treated as
     * absent (and reclaimable by createLink). */
-  def linkTarget(fs: FileSystem, root: String, name: String): Option[Link] = {
-    val f = linkFile(root, name)
-    if (!fs.exists(f)) return None
-    val in = fs.open(f)
-    val text =
-      try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
-      finally in.close()
-    val lines = text.linesIterator.map(_.trim).filter(_.nonEmpty).toSeq
-    if (!lines.lastOption.contains("end")) return None
-    lines.collectFirst { case l if l.startsWith("target ") => l.drop(7) }
-      .map(t => Link(name, t,
-        lines.collectFirst { case l if l.startsWith("version ") => l.drop(8).toInt }))
-  }
+  def linkTarget(fs: FileSystem, root: String, name: String): Option[Link] =
+    readRecord(fs, linkFile(root, name)).flatMap { lines =>
+      field(lines, "target").headOption
+        .map(Link(name, _, field(lines, "version").headOption.map(_.toInt)))
+    }
 
   /** All links under the root (the listing surface — symlinks show up
     * in namespace listings with their targets, as in the reference's
@@ -1053,20 +1036,15 @@ object CommitLog {
     * pre-restore version stays readable via snapshot(version):
     * restore adds history, never erases it. CAS-pinned like the
     * other ceremonies. Returns the restore commit's version. */
-  def restore(fs: FileSystem, tableDir: String, v: Int, ts: Long): Int = {
-    val next = maxVersionOnDisk(fs, tableDir).map(_ + 1).getOrElse(0)
-    val cs = stableCommits(fs, tableDir)
-    val target = activeSet(cs.filter(_.version <= v))
-    require(target.nonEmpty, s"nothing to restore: version $v has no active files in $tableDir")
-    val current = activeSet(cs)
-    val adds = target.filterNot(current.toSet)
-    val removes = current.filterNot(target.toSet)
-    if (!tryCommit(fs, tableDir, next, ts, adds, removes, tags = Seq("restore"),
-        schema = addsSchema(fs, tableDir, adds)))
-      throw new java.util.ConcurrentModificationException(
-        s"$tableDir advanced past version $next during restore — retry")
-    next
-  }
+  def restore(fs: FileSystem, tableDir: String, v: Int, ts: Long): Int =
+    cas(fs, tableDir, "restore", v, ts) { (_, cs) =>
+      val target = activeSet(cs.filter(_.version <= v))
+      require(target.nonEmpty, s"nothing to restore: version $v has no active files in $tableDir")
+      val current = activeSet(cs)
+      val adds = target.filterNot(current.toSet)
+      Swap(adds, current.filterNot(target.toSet), tags = Seq("restore"),
+        schema = addsSchema(fs, tableDir, adds))
+    }.version
 
   /** DECOMMISSION / DRAIN a storage prefix (reference
     * server/namenode/DecommissionManager.java:1 — retire a node by
@@ -1082,29 +1060,25 @@ object CommitLog {
   def drain(spark: SparkSession, tableDir: String, prefix: String,
             destRelPath: String, ts: Long): (Int, Seq[String]) = {
     val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    val next = maxVersionOnDisk(fs, tableDir).map(_ + 1).getOrElse(0)
-    val entries = activeEntries(stableCommits(fs, tableDir))
-    val active = entries.map(_._1)
-    val isDoomed = (p: String) => p == prefix || p.startsWith(prefix + "/")
-    val doomed = active.filter(isDoomed)
-    require(doomed.nonEmpty, s"nothing to drain: no active files under $prefix in $tableDir")
-    // The overwrite-write below (and the delete on CAS failure) would
-    // clobber live data if destRelPath is already an active path — the
-    // mirror of the doomed-nonempty check on the other side.
-    require(!active.exists(p => p == destRelPath || p.startsWith(destRelPath + "/")
-        || destRelPath.startsWith(p + "/")),
-      s"drain dest $destRelPath overlaps an active path in $tableDir")
-    val survivors = active.filterNot(doomed.toSet)
-    read(spark, tableDir, entries.filter { case (p, _) => isDoomed(p) })
-      .write.mode("overwrite").parquet(s"$tableDir/$destRelPath")
-    if (!tryCommit(fs, tableDir, next, ts, adds = survivors :+ destRelPath,
-        removes = doomed, checkpointMarker = true, tags = Seq("drain"),
-        schema = addsSchema(fs, tableDir, survivors :+ destRelPath))) {
-      fs.delete(new Path(tableDir, destRelPath), true)
-      throw new java.util.ConcurrentModificationException(
-        s"$tableDir advanced past version $next during drain — retry")
+    val c = cas(fs, tableDir, "drain", Int.MaxValue, ts) { (_, cs) =>
+      val entries = activeEntries(cs)
+      val active = entries.map(_._1)
+      val isDoomed = (p: String) => p == prefix || p.startsWith(prefix + "/")
+      val doomed = active.filter(isDoomed)
+      require(doomed.nonEmpty, s"nothing to drain: no active files under $prefix in $tableDir")
+      // The overwrite-write below (and the delete on CAS failure) would
+      // clobber live data if destRelPath is already an active path — the
+      // mirror of the doomed-nonempty check on the other side.
+      require(!active.exists(p => p == destRelPath || p.startsWith(destRelPath + "/")
+          || destRelPath.startsWith(p + "/")),
+        s"drain dest $destRelPath overlaps an active path in $tableDir")
+      val survivors = active.filterNot(doomed.toSet)
+      read(spark, tableDir, entries.filter { case (p, _) => isDoomed(p) })
+        .write.mode("overwrite").parquet(s"$tableDir/$destRelPath")
+      Swap(survivors :+ destRelPath, doomed, image = true, tags = Seq("drain"),
+        schema = addsSchema(fs, tableDir, survivors :+ destRelPath), staged = Some(destRelPath))
     }
-    (next, doomed)
+    (c.version, c.removes)
   }
 
   /** Delete data directories never referenced by any commit (staging
@@ -1166,15 +1140,11 @@ object CommitLog {
     * writers, never with data. */
   def flush(fs: FileSystem, tableDir: String, writer: String,
             adds: Seq[String], ts: Long): Unit = {
-    if (isFrozen(fs, tableDir))
-      throw new java.io.IOException(
-        s"$tableDir is frozen (safe mode): flush refused before any metadata I/O")
+    refuseFrozen(fs, tableDir, "flush")
     fs.mkdirs(inflightDir(tableDir))
-    val body = (s"ts $ts" +: adds.map("add " + _) :+ "end")
-      .mkString("", "\n", "\n")
     val tmp = new Path(inflightDir(tableDir), s"$writer.flush.tmp")
     val out = fs.create(tmp, true)
-    try out.write(body.getBytes("UTF-8")) finally out.close()
+    try out.write(record(s"ts $ts" +: adds.map("add " + _))) finally out.close()
     val dst = flushMarker(tableDir, writer)
     fs.delete(dst, false)
     if (!fs.rename(tmp, dst))
@@ -1189,30 +1159,12 @@ object CommitLog {
                                tableDir: String): Seq[(String, Boolean, Seq[String])] = {
     val dir = inflightDir(tableDir)
     if (!fs.exists(dir)) return Seq.empty
-    fs.listStatus(dir).toSeq
-      .filter { st =>
-        val n = st.getPath.getName
-        n.endsWith(".flush") || n.endsWith(".flush.tmp")
-      }
-      .flatMap { st =>
-        val text =
-          try {
-            val in = fs.open(st.getPath)
-            try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
-            finally in.close()
-          } catch {
-            // a tmp can legitimately vanish mid-listing (renamed over
-            // the marker) — absent is the correct reading
-            case _: java.io.FileNotFoundException => ""
-          }
-        val lines = text.linesIterator.map(_.trim).filter(_.nonEmpty).toSeq
-        if (!lines.lastOption.contains("end")) None
-        else {
-          val name = st.getPath.getName
-          Some((name.stripSuffix(".tmp").stripSuffix(".flush"), name.endsWith(".tmp"),
-            lines.collect { case l if l.startsWith("add ") => l.drop(4) }))
-        }
-      }
+    fs.listStatus(dir).toSeq.flatMap { st =>
+      val name = st.getPath.getName
+      if (!name.endsWith(".flush") && !name.endsWith(".flush.tmp")) None
+      else readRecord(fs, st.getPath).map(lines =>
+        (name.stripSuffix(".tmp").stripSuffix(".flush"), name.endsWith(".tmp"), field(lines, "add")))
+    }
   }
 
   /** The CURRENT flushed-but-unpromoted set, per writer: the newest
@@ -1254,7 +1206,7 @@ object CommitLog {
     * open-for-read-with-flushed-length path. */
   def snapshotWithInflight(spark: SparkSession, tableDir: String): DataFrame = {
     val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    val committed = activeEntries(headCommits(fs, tableDir))
+    val committed = entriesAt(fs, tableDir, Int.MaxValue)
     val flushed = flushedAdds(fs, tableDir).values.flatten.toSeq.distinct
       .filterNot(committed.map(_._1).toSet)
     val all = committed ++ flushed.map(_ -> None)

@@ -1045,6 +1045,108 @@ class CommitLogSpec extends SparkSpec {
     assert(CommitLog.snapshot(spark, dir).count() == rows)
     assert(CommitLog.maybeCheckpoint(spark, dir, 2000L, maxReplay = 10).isEmpty)
     intercept[NumberFormatException] { CommitLog.snapshot(spark, dir, version = image - 1) }
+    // the ceremonies replay from the newest image too: none opens a pre-image log
+    val atImage = CommitLog.activeFiles(fs, dir, image)
+    CommitLog.commit(fs, dir, 3000L, Seq("data/s0"), Nil)
+    assert(CommitLog.maybeCheckpoint(spark, dir, 3001L, maxReplay = 0).isDefined)
+    CommitLog.commit(fs, dir, 3002L, Seq("data/s1"), Nil)
+    assert(CommitLog.saveNamespace(spark, dir, 3003L).isDefined)
+    val doomed = CommitLog.activeFiles(fs, dir).head
+    assert(CommitLog.drain(spark, dir, doomed, "data/drained", 3004L)._2 == Seq(doomed))
+    CommitLog.restore(fs, dir, image, 3005L)
+    assert(CommitLog.activeFiles(fs, dir).toSet == atImage.toSet)
+    intercept[NumberFormatException] { CommitLog.restore(fs, dir, image - 1, 3006L) }
+  }
+
+  test("a frozen table refuses drain and startUpgrade before staging any data") {
+    val dir = freshTable("frozen_ceremonies")
+    val n = Tables.nation(spark, sfDir)
+    CommitLog.writeCommit(spark, dir, n.filter(col("n_nationkey") < 5), "data/store0", ts = 100L)
+    CommitLog.writeCommit(spark, dir, n.filter(col("n_nationkey") >= 5), "data/store1", ts = 200L)
+    val journal = CommitLog.commits(fs, dir)
+    CommitLog.freeze(fs, dir)
+    intercept[java.io.IOException] {
+      CommitLog.drain(spark, dir, "data/store1", "data/absorbed", ts = 300L)
+    }
+    intercept[java.io.IOException] {
+      CommitLog.startUpgrade(spark, dir, n, "data/wide", ts = 400L)
+    }
+    Seq("data/absorbed", "data/wide").foreach { d =>
+      assert(!fs.exists(new Path(s"$dir/$d")), s"$d staged on a frozen table")
+    }
+    assert(CommitLog.commits(fs, dir) == journal)
+    assert(fs.listStatus(new Path(s"$dir/_log")).length == journal.size, "a refusal burned a version")
+    CommitLog.unfreeze(fs, dir)
+  }
+
+  /** The active set by folding every commit of the journal in order. */
+  private def fullReplay(cs: Seq[CommitLog.Commit]): Seq[String] = {
+    val active = scala.collection.mutable.LinkedHashSet.empty[String]
+    cs.foreach { c => active ++= c.adds; active --= c.removes }
+    active.toSeq
+  }
+
+  test("an image racing an append: one winner per version, the head keeps the append") {
+    val n = Tables.nation(spark, sfDir)
+    var imageLost = 0
+    for (trial <- 0 until 6) {
+      val dir = freshTable(s"race_image_$trial")
+      CommitLog.writeCommit(spark, dir, n.filter(col("n_nationkey") < 5), "data/m0", ts = 100L)
+      CommitLog.writeCommit(spark, dir, n.filter(col("n_nationkey") >= 5), "data/m1", ts = 200L)
+      n.limit(1).write.parquet(s"$dir/data/m2") // appended data, staged pre-race
+      // both contenders enter targeting version 2
+      val barrier = new java.util.concurrent.CyclicBarrier(2)
+      @volatile var lost = false
+      val it = new Thread(() => {
+        barrier.await()
+        try {
+          if (trial % 2 == 0) CommitLog.maybeCheckpoint(spark, dir, 300L, maxReplay = 0)
+          else CommitLog.saveNamespace(spark, dir, 300L)
+        } catch { case _: java.util.ConcurrentModificationException => lost = true }
+      })
+      @volatile var appendV = -1
+      val at = new Thread(() => {
+        barrier.await()
+        appendV = CommitLog.commit(fs, dir, 301L, Seq("data/m2"), Nil)
+      })
+      it.start(); at.start(); it.join(30000); at.join(30000)
+      assert(appendV >= 2, "append must always land (commit retries past losses)")
+      if (lost) {
+        imageLost += 1
+        assert(CommitLog.saveNamespace(spark, dir, 400L).nonEmpty, "the retried image lands")
+      }
+      val cs = CommitLog.commits(fs, dir)
+      assert(cs.map(_.version) == (0 to 3), s"one winner per version, contiguous: ${cs.map(_.version)}")
+      assert(cs.count(_.isCheckpoint) == 1 && cs.exists(_.version == appendV))
+      assert(CommitLog.activeFiles(fs, dir).toSet == Set("data/m0", "data/m1", "data/m2"),
+        s"trial $trial: the head lost the append (append@$appendV)")
+      assert(CommitLog.activeFiles(fs, dir) == fullReplay(cs))
+      assert(CommitLog.snapshot(spark, dir).count() == n.count() + 1)
+    }
+    info(s"race coverage: the image lost $imageLost of 6")
+    // the same race pinned in its window: the append's log file exists
+    // but is not yet terminated when the image lists `_log`
+    val dir = freshTable("race_image_inflight")
+    CommitLog.writeCommit(spark, dir, n.filter(col("n_nationkey") < 5), "data/m0", ts = 100L)
+    CommitLog.writeCommit(spark, dir, n.filter(col("n_nationkey") >= 5), "data/m1", ts = 200L)
+    n.limit(1).write.parquet(s"$dir/data/m2")
+    val inflight = new Path(s"$dir/_log/000000002.log")
+    val out = fs.create(inflight, false)
+    out.write("ts 301\nadd data/m2\n".getBytes("UTF-8")); out.close()
+    val finisher = new Thread(() => {
+      Thread.sleep(300L)
+      val done = new Path(s"$dir/_log/finished.tmp")
+      val o = fs.create(done, false)
+      o.write("ts 301\nadd data/m2\nend\n".getBytes("UTF-8")); o.close()
+      fs.delete(inflight, false); fs.rename(done, inflight)
+    })
+    finisher.start()
+    val img = CommitLog.saveNamespace(spark, dir, 400L)
+    finisher.join(10000)
+    val cs = CommitLog.commits(fs, dir)
+    assert(img.contains(3) && cs.map(_.version) == (0 to 3))
+    assert(cs.last.adds.toSet == Set("data/m0", "data/m1", "data/m2"), "the image dropped the in-flight add")
+    assert(CommitLog.activeFiles(fs, dir) == fullReplay(cs))
   }
 
   test("retention at a metadata image keeps every live entry readable after vacuum") {
